@@ -149,9 +149,7 @@ object DeletionVectors {
               && !s.getPath.getName.startsWith("_"))
             .sortBy(-_.getLen).take(4)
           val (bytes, rows) = samples.foldLeft((0L, 0L)) { case ((b, r), s) =>
-            val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromPath(s.getPath, conf))
+            val rd = LocalParquet.openFile(conf, s.getPath)
             val n = try rd.getRecordCount finally rd.close()
             (b + s.getLen, r + n)
           }
@@ -728,8 +726,7 @@ object DeletionVectors {
         // retires them; throwing here would wedge a compactRatio stream
         // on every replay
         fsys.exists(p) && {
-          val rows = org.apache.parquet.hadoop.ParquetFileReader
-            .open(org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+          val rows = LocalParquet.openFile(conf, p)
           val n = try rows.getRecordCount finally rows.close()
           n > 0 && perFile(f).toDouble / n >= maxDeleteRatio
         }

@@ -4,8 +4,6 @@ import java.util.Base64
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{Column, SparkSession}
@@ -65,8 +63,7 @@ private[graft] object FileStats {
     * that are nested, unsupported (INT96), or carry unreliable chunk
     * stats are absent from the result. */
   def ofFooter(conf: Configuration, path: String): FileColStats = {
-    val rd = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(path), conf))
+    val rd = LocalParquet.openFile(conf, new Path(path))
     try {
       // (kind, min, max, nulls, rows, ok) accumulated across chunks
       val acc = scala.collection.mutable.LinkedHashMap

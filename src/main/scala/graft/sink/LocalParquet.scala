@@ -3,7 +3,9 @@ package graft.sink
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
@@ -17,10 +19,11 @@ import graft.sources.GroupDecode
 /** DRIVER-SIDE reads of METADATA-SIZED parquet (optimization r18,
   * guide §1.2 step 1 — fix the job SHAPE before configs).
   *
-  * Measured motivation (graft.Prof, sf0.1): every sidecar/tombstone
-  * consultation through `spark.read.parquet` costs one schema-infer
-  * job plus one collect job of near-zero task time, and the streaming
-  * drains consult sidecars several times PER MICRO-BATCH — job count,
+  * Measured motivation (per-job listener traces, sf0.1): every
+  * sidecar/tombstone consultation through `spark.read.parquet` costs
+  * one schema-infer job plus one collect job of near-zero task time,
+  * and the streaming drains consult sidecars several times PER
+  * MICRO-BATCH — job count,
   * not data volume, dominated all ten slowest queries (20–35 jobs and
   * 2.5–4 s of driver gap per batch against KB-sized state).
   *
@@ -56,12 +59,29 @@ private[graft] object LocalParquet {
     spark.conf.getOption(MaxRowsKey).map(_.toLong)
       .getOrElse(DefaultMaxRows)
 
+  /** Open one parquet file with read options taken from `conf`. The
+    * one-argument `ParquetFileReader.open(InputFile)` builds its
+    * options from a fresh `Configuration`, which re-parses Hadoop's
+    * XML defaults on every open (10–14 ms per open, against under
+    * 1 ms this way) — every footer open in the engine comes here. */
+  def openFile(conf: Configuration, path: Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      HadoopReadOptions.builder(conf, path).build())
+
+  /** A record reader of `path` as example `Group`s, configured from
+    * `conf` — `ParquetReader.builder(support, path)` would pay the
+    * same fresh-`Configuration` parse as [[openFile]] avoids. */
+  def groupReader(conf: Configuration, path: Path): ParquetReader[Group] =
+    new ParquetReader.Builder[Group](HadoopInputFile.fromPath(path, conf)) {
+      override protected def getReadSupport(): ReadSupport[Group] =
+        new GroupReadSupport()
+    }.build()
+
   /** Exact row count from parquet FOOTERS — no Spark job, no data
     * read. The count a `df.count()` of the same files returns. */
   def footerRowCount(conf: Configuration, parts: Seq[String]): Long =
     parts.iterator.map { p =>
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(p), conf))
+      val r = openFile(conf, new Path(p))
       try r.getRecordCount finally r.close()
     }.sum
 
@@ -123,8 +143,7 @@ private[graft] object LocalParquet {
   def sparkSchema(conf: Configuration,
                   parts: Seq[String]): Option[StructType] =
     scala.util.Try {
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(parts.head), conf))
+      val r = openFile(conf, new Path(parts.head))
       try sparkSchemaOf(r.getFooter.getFileMetaData.getSchema)
       finally r.close()
     }.toOption.flatten
@@ -164,8 +183,7 @@ private[graft] object LocalParquet {
       var schema: StructType = null
       var rows = 0L
       parts.foreach { p =>
-        val r = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(p), conf))
+        val r = openFile(conf, new Path(p))
         try {
           rows += r.getRecordCount
           val s = sparkSchemaOf(r.getFooter.getFileMetaData.getSchema)
@@ -178,9 +196,7 @@ private[graft] object LocalParquet {
       val out = new scala.collection.mutable.ArrayBuffer[InternalRow](
         rows.toInt)
       parts.foreach { p =>
-        val reader = ParquetReader
-          .builder(new GroupReadSupport(), new Path(p))
-          .withConf(conf).build()
+        val reader = groupReader(conf, new Path(p))
         try {
           var g: Group = reader.read()
           var idx: Array[Int] = null
@@ -220,6 +236,46 @@ private[graft] object LocalParquet {
         .ofInternal(spark, schema, rows)
     }
   }
+
+  /** A flat (string key, long value) parquet set — a tombstone set's
+    * (file, row_idx) — decoded driver-side as key → sorted values,
+    * under the same byte/row caps as [[readLocal]]. None above them,
+    * or on a missing column or any read error: the caller keeps its
+    * distributed read. Not cached: the row cache's per-row form cost
+    * measurable retained heap, and decoding a set under the caps takes
+    * milliseconds. */
+  def readLongsByKey(spark: SparkSession, conf: Configuration,
+                     parts: Seq[String], keyCol: String,
+                     valCol: String): Option[Map[String, Array[Long]]] =
+    scala.util.Try {
+      val fs = new Path(parts.head).getFileSystem(conf)
+      if (parts.map(p => fs.getFileStatus(new Path(p)).getLen).sum >
+          maxBytes(spark) ||
+          footerRowCount(conf, parts) > maxRows(spark)) return None
+      val acc = scala.collection.mutable.HashMap
+        .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+      parts.foreach { p =>
+        val reader = groupReader(conf, new Path(p))
+        try {
+          var g: Group = reader.read()
+          if (g != null) {
+            val ki = g.getType.getFieldIndex(keyCol)
+            val vi = g.getType.getFieldIndex(valCol)
+            while (g != null) {
+              acc.getOrElseUpdate(g.getString(ki, 0),
+                new scala.collection.mutable.ArrayBuilder.ofLong) +=
+                g.getLong(vi, 0)
+              g = reader.read()
+            }
+          }
+        } finally reader.close()
+      }
+      acc.iterator.map { case (k, b) =>
+        val a = b.result()
+        java.util.Arrays.sort(a)
+        k -> a
+      }.toMap
+    }.toOption
 
   /** Pre-seed the cache for files a writer just produced whose rows
     * it already holds driver-side (sidecar folds) — the next

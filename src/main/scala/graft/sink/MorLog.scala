@@ -3,7 +3,7 @@ package graft.sink
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** LOG-BACKED MoR table — unified time travel across appends,
   * deletes, schema evolution AND compaction, under ONE commit log
@@ -544,8 +544,9 @@ object MorLog {
     else if (names.size <= 64) {
       // driver-side: a local footer read is ~1 ms — up to 64 files
       // that is cheaper than any job launch (threshold raised from
-      // 16 in r18 after Prof showed the distributed path's 1-file
-      // tasks dominated big-append commits with scheduling overhead)
+      // 16 in r18 after per-job traces showed the distributed path's
+      // 1-file tasks dominated big-append commits with scheduling
+      // overhead)
       val c = conf(spark)
       names.iterator
         .map(n => n -> scala.util.Try(
@@ -1497,6 +1498,88 @@ object MorLog {
     else scala.util.Try(LocalParquet.footerRowCount(conf(spark),
       Sidecars.partFiles(spark, s"$dir/$LogDir",
         tombsName(st.tombsV, st.tombsUid)))).toOption
+
+  /** `st`'s broadcast-tier tombstone set decoded on the driver as
+    * file name → sorted row indexes, with no Spark job: an empty map
+    * when the state has no such set, None when it sits above the
+    * [[LocalParquet]] caps (the caller then keeps its distributed
+    * plan). */
+  private def tombsLocal(spark: SparkSession, dir: String,
+                         st: State): Option[Map[String, Array[Long]]] =
+    if (st.tombsV < 0) Some(Map.empty)
+    else LocalParquet.readLongsByKey(spark, conf(spark),
+      Sidecars.partFiles(spark, s"$dir/$LogDir",
+        tombsName(st.tombsV, st.tombsUid)), FileCol, RowCol)
+
+  /** A (file, row_idx) plan over a subset of `bound`'s broadcast-tier
+    * set, collected as file name → sorted row indexes under the
+    * driver cap. When `bound`'s footer count already fits the cap the
+    * subset does too, so one job; otherwise it is counted exactly
+    * first and an over-cap subset fails loud. */
+  private def collectTombRows(spark: SparkSession, dir: String,
+                              plan: DataFrame, bound: State, cap: Long,
+                              what: String): Map[String, Array[Long]] = {
+    def grouped(df: DataFrame) = df.groupBy(col(FileCol))
+      .agg(sort_array(collect_list(col(RowCol))).as("r"))
+      .collect()
+      .map(r => r.getString(0) -> r.getSeq[Long](1).toArray).toMap
+    if (tombsFooterCount(spark, dir, bound).exists(_ <= cap)) grouped(plan)
+    else {
+      val h = plan.persist()
+      try {
+        guardDriverRows(cap, what, h.count())
+        grouped(h)
+      } finally h.unpersist()
+    }
+  }
+
+  private def guardRowMap(cap: Long, what: String,
+                          m: Map[String, Array[Long]])
+      : Map[String, Array[Long]] = {
+    guardDriverRows(cap, what, m.valuesIterator.map(_.length.toLong).sum)
+    m
+  }
+
+  /** `st`'s broadcast-tier tombstones on the files `names`, as file
+    * name → sorted row indexes — decoded on the driver with no job
+    * under the [[LocalParquet]] caps, one capped distributed collect
+    * above them. */
+  private def tombsRowsOf(spark: SparkSession, dir: String, st: State,
+                          names: Seq[String], cap: Long,
+                          what: String): Map[String, Array[Long]] =
+    tombsLocal(spark, dir, st) match {
+      case Some(all) =>
+        guardRowMap(cap, what, names.iterator.flatMap(n =>
+          all.get(n).map(n -> _)).toMap)
+      case None =>
+        collectTombRows(spark, dir,
+          tombsOf(spark, dir, st).get
+            .filter(col(FileCol).isInCollection(names)), st, cap, what)
+    }
+
+  /** The broadcast-tier tombstones `st` holds and `prev` does not, as
+    * file name → sorted row indexes. Under the [[LocalParquet]] caps
+    * both sets decode on the driver and the difference is taken there
+    * (no Spark job); above them a distributed `exceptAll` is collected
+    * under the driver cap. */
+  private def tombsAdded(spark: SparkSession, dir: String, prev: State,
+                         st: State, cap: Long,
+                         what: String): Map[String, Array[Long]] =
+    if (st.tombsV < 0) Map.empty
+    else (tombsLocal(spark, dir, st), tombsLocal(spark, dir, prev)) match {
+      case (Some(now), Some(old)) =>
+        guardRowMap(cap, what, now.iterator.flatMap { case (n, rows) =>
+          val o = old.getOrElse(n, Array.emptyLongArray)
+          val add = rows.filter(java.util.Arrays.binarySearch(o, _) < 0)
+          if (add.isEmpty) None else Some(n -> add)
+        }.toMap)
+      case _ =>
+        val newT = tombsOf(spark, dir, st).get
+        collectTombRows(spark, dir, tombsOf(spark, dir, prev) match {
+          case None => newT
+          case Some(o) => newT.exceptAll(o)
+        }, st, cap, what)
+    }
 
   /** The full tombstone set of `st` as (file NAME, row_idx) —
     * tier-transparent; O(total) in the per-file tier, so only
@@ -3199,18 +3282,8 @@ object MorLog {
     val names = scan.map(n => new Path(resolvePath(dir, n)).getName)
     val bTombs: Map[String, Array[Long]] =
       if (st.tombsV < 0 || !withTombs) Map.empty
-      else {
-        val rel = tombsOf(spark, dir, st).get
-          .filter(col(FileCol).isInCollection(names)).persist()
-        try {
-          guardDriverRows(cdfCapOf(spark, dir), "connector scan",
-            rel.count())
-          rel.groupBy(col(FileCol))
-            .agg(sort_array(collect_list(col(RowCol))).as("r"))
-            .collect()
-            .map(r => r.getString(0) -> r.getSeq[Long](1).toArray).toMap
-        } finally rel.unpersist()
-      }
+      else tombsRowsOf(spark, dir, st, names, cdfCapOf(spark, dir),
+        "connector scan")
     (st.schema, scan.map(n => resolvePath(dir, n)),
       st.schema.fields.map(f => f.name -> physOf(f)).toMap,
       bTombs, st.pfCeil, skip.size)
@@ -3236,12 +3309,16 @@ object MorLog {
     * pair; netting across versions is the consumer's GROUP BY, or
     * [[incrementalChanges]] on the Scala side). Everything here is
     * METADATA work: file-list diffs off cached states, sidecar-gen
-    * maps, and the broadcast tier's (metadata-sized) tombstone
-    * deltas; the row payloads stay in the per-file partitions the
+    * maps, and the broadcast tier's tombstone deltas, which come from
+    * the same [[tombsAdded]]/[[tombsRowsOf]] helpers as
+    * [[incrementalChanges]] — decoded on the driver with no Spark job
+    * under the [[LocalParquet]] caps, one capped distributed collect
+    * above them. The row payloads stay in the per-file partitions the
     * scan plans. Compactions/clusterings contribute nothing;
     * RESTORE/RENAME inside the span and the broadcast→per-file
     * migration crossing (whose delta is O(total set)) are rejected
-    * loud — consume those spans via [[incrementalChanges]]. */
+    * loud — consume those spans via [[MorLog.changes]], which falls
+    * back to the snapshot diff for them. */
   private[graft] def connectorChangesPlan(spark: SparkSession,
                                           dir: String, fromV: Int,
                                           toV: Int)
@@ -3296,41 +3373,8 @@ object MorLog {
           } else {
             val names = removed.map(e =>
               new Path(resolvePath(dir, e)).getName)
-            val ex: Map[String, Array[Long]] =
-              tombsOf(spark, dir, prev) match {
-                case None => Map.empty
-                case Some(t) =>
-                  val hit = t.filter(col(FileCol).isInCollection(names))
-                  // FOOTER pre-bound (r18): the filtered set is ⊆ the
-                  // prev tombs set; when that set's footer row count
-                  // (free, driver-side) already fits the cap, the
-                  // guard holds a fortiori — collect in ONE job
-                  // instead of persist + count + collect. Only a
-                  // bigger-than-cap superset pays the exact count.
-                  if (tombsFooterCount(spark, dir, prev)
-                      .exists(_ <= cdfCap))
-                    hit.groupBy(col(FileCol))
-                      .agg(sort_array(collect_list(col(RowCol))).as("r"))
-                      .collect()
-                      .map(r => r.getString(0) ->
-                        r.getSeq[Long](1).toArray).toMap
-                  else {
-                    val h = hit.persist()
-                    try {
-                      // the one exclude-path sibling of the three
-                      // capped CDF collects — same loud bound
-                      // (verdict-caught)
-                      guardDriverRows(cdfCap,
-                        s"change span exclude (v$v)", h.count())
-                      h.groupBy(col(FileCol))
-                        .agg(sort_array(collect_list(col(RowCol)))
-                          .as("r"))
-                        .collect()
-                        .map(r => r.getString(0) ->
-                          r.getSeq[Long](1).toArray).toMap
-                    } finally h.unpersist()
-                  }
-              }
+            val ex = tombsRowsOf(spark, dir, prev, names, cdfCap,
+              s"change span exclude (v$v)")
             removed.foreach { e =>
               val n = new Path(resolvePath(dir, e)).getName
               specs += ChangeFileSpec(resolvePath(dir, e), v, "delete",
@@ -3353,36 +3397,12 @@ object MorLog {
           }
         } else if (st.pfCeil < 0 && (st.tombsV != prev.tombsV ||
             st.tombsUid != prev.tombsUid) && st.tombsV >= 0) {
-          val newT = tombsOf(spark, dir, st).get
-          val deltaPlan = tombsOf(spark, dir, prev) match {
-            case None => newT
-            case Some(o) => newT.exceptAll(o)
-          }
-          def emit(rows: Array[org.apache.spark.sql.Row]): Unit =
-            rows.foreach { r =>
-              byName.get(r.getString(0)).foreach(abs =>
+          tombsAdded(spark, dir, prev, st, cdfCap, s"change span (v$v)")
+            .toSeq.sortBy(_._1).foreach { case (n, rows) =>
+              byName.get(n).foreach(abs =>
                 specs += ChangeFileSpec(abs, v, "delete", "include",
-                  r.getSeq[Long](1).toArray, "", ""))
+                  rows, "", ""))
             }
-          // FOOTER pre-bound (r18): delta ⊆ the new tombs set; when
-          // the new set's footer count fits the cap the guard holds a
-          // fortiori — collect in ONE job per version instead of
-          // persist + count + collect (a 4-version netted drain paid
-          // three jobs per version here, inside queryPlanning).
-          if (tombsFooterCount(spark, dir, st).exists(_ <= cdfCap))
-            emit(deltaPlan.groupBy(col(FileCol))
-              .agg(sort_array(collect_list(col(RowCol))).as("r"))
-              .collect())
-          else {
-            val delta = deltaPlan.persist()
-            try {
-              guardDriverRows(cdfCap,
-                s"change span (v$v)", delta.count())
-              emit(delta.groupBy(col(FileCol))
-                .agg(sort_array(collect_list(col(RowCol))).as("r"))
-                .collect())
-            } finally delta.unpersist()
-          }
         }
       }
       prev = st
@@ -3392,15 +3412,61 @@ object MorLog {
       specs.result())
   }
 
+  /** Actions whose versions keep the key unique: keyed writes that
+    * refuse duplicate source keys, deletes, value-invisible rewrites
+    * and property-only commits. A change span made only of these is
+    * read from the log's per-version deltas. */
+  private val KeyedActions =
+    Set("merge", "upsert", "delete", "compact", "cluster", "setProperties")
+
+  /** True when every version of (fromV, toV] is in the log and keeps
+    * keys unique: the built-in [[KeyedActions]] and the stream drains'
+    * `merge:`/`upsert:` tags. Anything else — `append`, `evolve`,
+    * `update`, `overwrite`, `restore:`, `rename:`, `clone:`,
+    * `dropcol:`, a DSv2 sink's `sink:` epoch (keyed or append-only
+    * under one tag) — or an empty or gapped span is not. */
+  private def keyedSpan(spark: SparkSession, dir: String, fromV: Int,
+                        toV: Int): Boolean = {
+    val vs = versions(spark, dir)
+    fromV < toV && vs.contains(fromV) &&
+      (fromV + 1 to toV).forall { v =>
+        vs.contains(v) && {
+          val a = state(spark, dir, v).action
+          KeyedActions(a) || a.startsWith("merge:") ||
+            a.startsWith("upsert:")
+        }
+      }
+  }
+
   /** CDC_CHANGES between two committed versions, at key granularity:
-    * (keys…, change ∈ insert/update/delete, _old, _new) — the
-    * [[AtomicParquetSink.tableChanges]] classification over the log's
-    * snapshots, so "what changed between v3 and v7" is one call
-    * regardless of how many upserts/deletes/compactions lie between.
-    * Value-identical frames (e.g. across a pure compaction) diff to
-    * zero rows. */
+    * (keys…, change ∈ insert/update/delete, _old, _new), so "what
+    * changed between v3 and v7" is one call regardless of how many
+    * upserts/deletes/compactions lie between. Value-identical frames
+    * (e.g. across a pure compaction) give zero rows.
+    *
+    * Routing: when every version in the span keeps keys unique (see
+    * [[keyedSpan]]) the feed is derived from the log's per-version
+    * deltas by [[incrementalChanges]] — only the changed rows and the
+    * files that lost rows are read, and broadcast-tier tombstone
+    * deltas are taken on the driver with no Spark job. Any other span
+    * (a plain append that may duplicate a key, a schema change, an
+    * update that may rewrite a key, a restore, rename, clone, column
+    * drop or sink epoch, or `fromV >= toV`) falls back to the
+    * snapshot diff, which is exact for any history. Either way
+    * `keyCols` must identify a row, as the table's merge key does. */
   def changes(spark: SparkSession, dir: String, fromV: Int, toV: Int,
-              keyCols: Seq[String]): DataFrame = {
+              keyCols: Seq[String]): DataFrame =
+    if (keyedSpan(spark, dir, fromV, toV))
+      incrementalChanges(spark, dir, fromV, toV, keyCols)
+    else snapshotChanges(spark, dir, fromV, toV, keyCols)
+
+  /** The change span as a diff of the two full snapshots (a full outer
+    * join on `keyCols`, the [[AtomicParquetSink.tableChanges]]
+    * classification): [[changes]]' fallback, and the independent
+    * oracle the incremental form is checked against. */
+  private[graft] def snapshotChanges(spark: SparkSession, dir: String,
+                                     fromV: Int, toV: Int,
+                                     keyCols: Seq[String]): DataFrame = {
     val a = readVersion(spark, dir, fromV)
     val toSchema = state(spark, dir, toV).schema
     // a span crossing an evolveAppend: project the old snapshot to
@@ -3438,42 +3504,52 @@ object MorLog {
           st.schema, st.files, st.tombsUid), cur.files)
     }
 
-  /** The tombstones ADDED between two consecutive states, as (file
-    * NAME, row_idx) — tier-aware: sidecar-pair diffs in the per-file
-    * tier (O(files changed in the span)), exceptAll in the broadcast
-    * tier, and the one MIGRATION crossing pays a full-set diff once. */
-  private def tombsDelta(spark: SparkSession, dir: String,
-                         prev: State, st: State): Option[DataFrame] =
-    (prev.pfCeil, st.pfCeil) match {
-      case (_, p) if p < 0 && st.tombsV == prev.tombsV &&
-        st.tombsUid == prev.tombsUid => None
-      case (pp, p) if pp >= 0 && p >= 0 =>
-        if (pp == p) None
-        else Some(DvPerFile.tombstoneDelta(spark, dir, pp, p)
-          .select(element_at(split(col(FileCol), "/"), -1).as(FileCol),
-            col(RowCol)))
-      case (pp, p) if pp < 0 && p >= 0 => // the migration crossing
-        val now = tombsAsNames(spark, dir, st).get
-        Some(tombsOf(spark, dir, prev) match {
-          case None => now
-          case Some(o) => now.exceptAll(o)
-        })
-      case _ => // broadcast tier on both sides
-        val newT = tombsOf(spark, dir, st).get
-        Some(tombsOf(spark, dir, prev) match {
-          case None => newT
-          case Some(o) => newT.exceptAll(o)
-        })
+  /** The tombstones ADDED between two consecutive states when `st` is
+    * in the per-file tier, as a (file NAME, row_idx) plan: sidecar-pair
+    * diffs (O(files changed in the span)), and the one MIGRATION
+    * crossing pays a full-set diff once. Broadcast-tier deltas go
+    * through [[tombsAdded]]. */
+  private def pfTombsDelta(spark: SparkSession, dir: String,
+                           prev: State, st: State): Option[DataFrame] =
+    if (prev.pfCeil == st.pfCeil) None
+    else if (prev.pfCeil >= 0)
+      Some(DvPerFile.tombstoneDelta(spark, dir, prev.pfCeil, st.pfCeil)
+        .select(element_at(split(col(FileCol), "/"), -1).as(FileCol),
+          col(RowCol)))
+    else { // the migration crossing
+      val now = tombsAsNames(spark, dir, st).get
+      Some(tombsOf(spark, dir, prev) match {
+        case None => now
+        case Some(o) => now.exceptAll(o)
+      })
     }
+
+  /** A file name → row indexes map as a local (file, row_idx) frame:
+    * a broadcast build side that needs no Spark job. */
+  private def tombRowsFrame(spark: SparkSession,
+                            rows: Map[String, Array[Long]]): DataFrame =
+    org.apache.spark.sql.graftx.LocalFrames.ofInternal(spark,
+      StructType(Seq(StructField(FileCol, StringType),
+        StructField(RowCol, LongType))),
+      rows.iterator.flatMap { case (n, rs) =>
+        val u = org.apache.spark.unsafe.types.UTF8String.fromString(n)
+        rs.iterator.map(r =>
+          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+            Array[Any](u, r)): org.apache.spark.sql.catalyst.InternalRow)
+      }.toSeq)
 
   /** INCREMENTAL change feed (Delta's CDF shape): the net
     * insert/update/delete set over (fromV, toV], derived from the
     * LOG'S OWN PER-VERSION DELTAS — the files each version added and
     * the tombstone-set growth — never from snapshot scans. Cost is
     * O(changed data + affected files), at ANY table size, vs
-    * [[changes]]' two full snapshot reads; the two agree exactly
-    * (spec-pinned), so [[changes]] is the small-table/ad-hoc form
-    * and this is the 100 TB subscription form.
+    * [[snapshotChanges]]' two full snapshot reads; the two agree
+    * exactly on keyed spans (spec-pinned). [[changes]] routes here
+    * whenever every version of the span keeps keys unique and falls
+    * back to the snapshot diff otherwise. A broadcast-tier tombstone
+    * delta is taken on the driver ([[tombsAdded]]: no Spark job under
+    * the [[LocalParquet]] caps) and joins the old images as a local
+    * build side; a per-file-tier delta stays distributed.
     *
     * Contract: the span's versions must follow the keyed
     * single-visible-row discipline ([[create]]/[[upsert]]/
@@ -3532,38 +3608,44 @@ object MorLog {
               Some(src.select(keyCols.map(col) :+ lit(v).as("_v") :+
                 lit("I").as("_kind") :+ payload(src).as("_payload"): _*))
             }
-          val del = tombsDelta(spark, dir, prev, st).flatMap { delta =>
-            // the delta names only the files that LOST rows this
-            // version — the old images load from just those files.
-            // ONE grouped pass serves both the names and the
-            // driver-row guard (broadcast-tier deltas ride a driver
-            // broadcast: same cap as the connector span reads;
-            // per-file-tier deltas are already O(files changed) —
-            // review-caught: a separate count() re-ran the exceptAll)
-            val perFile = delta.groupBy(col(FileCol))
-              .agg(count(lit(1)).as("n")).collect()
-            if (prev.pfCeil < 0)
-              guardDriverRows(cdfCap, s"incrementalChanges (v$v)",
-                perFile.iterator.map(_.getLong(1)).sum)
-            val names = perFile.map(_.getString(0)).toSeq.sorted
-            if (names.isEmpty) None
-            else {
-              val src = readFilesWithId(spark, dir, prev, names)
-              Some(src
-                .join(broadcast(delta),
-                  col(RName) === col(FileCol) && col(RRow) === col(RowCol),
-                  "left_semi")
-                .select(keyCols.map(col) :+ lit(v).as("_v") :+
-                  lit("D").as("_kind") :+ payload(src).as("_payload"): _*))
+          // the files that LOST rows this version and their lost
+          // (file, row_idx) pairs — the old images load from just
+          // those files. A broadcast-tier delta is taken on the driver
+          // ([[tombsAdded]]: no job under the LocalParquet caps,
+          // capped like the connector span reads above them); a
+          // per-file-tier delta is already O(files changed) and its
+          // names come from one grouped pass.
+          val lost: Option[(Seq[String], DataFrame)] =
+            if (st.pfCeil < 0) {
+              if (st.tombsV == prev.tombsV && st.tombsUid == prev.tombsUid)
+                None
+              else {
+                val rows = tombsAdded(spark, dir, prev, st, cdfCap,
+                  s"incrementalChanges (v$v)")
+                if (rows.isEmpty) None
+                else Some((rows.keys.toSeq.sorted,
+                  tombRowsFrame(spark, rows)))
+              }
+            } else pfTombsDelta(spark, dir, prev, st).flatMap { delta =>
+              val names = delta.select(col(FileCol)).distinct()
+                .collect().map(_.getString(0)).toSeq.sorted
+              if (names.isEmpty) None else Some((names, delta))
             }
+          val del = lost.map { case (names, delta) =>
+            val src = readFilesWithId(spark, dir, prev, names)
+            src
+              .join(broadcast(delta),
+                col(RName) === col(FileCol) && col(RRow) === col(RowCol),
+                "left_semi")
+              .select(keyCols.map(col) :+ lit(v).as("_v") :+
+                lit("D").as("_kind") :+ payload(src).as("_payload"): _*)
           }
           (dropDel.toSeq ++ del.toSeq ++ ins.toSeq)
         }
       prev = st
       out
     }
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    val empty = org.apache.spark.sql.graftx.LocalFrames.ofInternal(spark,
       org.apache.spark.sql.types.StructType(
         keyCols.map(k => org.apache.spark.sql.types.StructField(k,
           toSchema(k).dataType)) ++ Seq(
@@ -3574,7 +3656,7 @@ object MorLog {
           org.apache.spark.sql.types.StructField("_payload",
             org.apache.spark.sql.types.StructType(nonKey.map(c =>
               org.apache.spark.sql.types.StructField(c,
-                toSchema(c).dataType)))))))
+                toSchema(c).dataType)))))), Seq.empty)
     val ev = events.foldLeft(empty)(_ unionByName _)
     // per-key netting: a delete orders before an insert within one
     // version (an upsert is delete-then-insert); net old = the first

@@ -5,10 +5,8 @@ import java.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -1033,12 +1031,12 @@ private[graft] object GroupDecode {
 
   def openReader(conf: Configuration, p: Path,
                  physNames: Array[String]): ParquetReader[Group] = {
-    val footer = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+    val footer = graft.sink.LocalParquet.openFile(conf, p)
     val fileSchema = try footer.getFooter.getFileMetaData.getSchema
     finally footer.close()
     conf.set(ReadSupport.PARQUET_READ_SCHEMA,
       projectedSchema(fileSchema, physNames.toSet).toString)
-    ParquetReader.builder(new GroupReadSupport(), p).withConf(conf).build()
+    graft.sink.LocalParquet.groupReader(conf, p)
   }
 }
 

@@ -145,7 +145,7 @@ class MorLogSpec extends AnyFunSuite {
       Seq((1L, -9L, null.asInstanceOf[String])).toDF("id", "v", "tag"),
       "id") // v5: re-update an already-updated key
     for ((f, t) <- Seq((0, 5), (0, 2), (1, 4), (2, 5))) {
-      val snap = MorLog.changes(spark, dir, f, t, Seq("id"))
+      val snap = MorLog.snapshotChanges(spark, dir, f, t, Seq("id"))
       val inc = MorLog.incrementalChanges(spark, dir, f, t, Seq("id"))
       assert(inc.exceptAll(snap).isEmpty && snap.exceptAll(inc).isEmpty,
         s"CDF ($f,$t] diverged from the snapshot diff")
@@ -249,7 +249,7 @@ class MorLogSpec extends AnyFunSuite {
       // CDF: incremental equals snapshot diff within the per-file
       // tier AND across the migration crossing
       for ((f, t) <- Seq((0, 2), (1, 3), (2, 4), (0, 4))) {
-        val snap = MorLog.changes(spark, dir, f, t, Seq("id"))
+        val snap = MorLog.snapshotChanges(spark, dir, f, t, Seq("id"))
         val inc = MorLog.incrementalChanges(spark, dir, f, t, Seq("id"))
         assert(inc.exceptAll(snap).isEmpty && snap.exceptAll(inc).isEmpty,
           s"CDF ($f,$t] diverged across the migration")
@@ -449,7 +449,7 @@ class MorLogSpec extends AnyFunSuite {
       val last = snapshots.size - 1
       for (_ <- 0 until 3) {
         val f = rnd.nextInt(last); val t = f + 1 + rnd.nextInt(last - f)
-        val snap = MorLog.changes(spark, dir, f, t, Seq("id"))
+        val snap = MorLog.snapshotChanges(spark, dir, f, t, Seq("id"))
         val expected = {
           val (a, b) = (snapshots(f), snapshots(t))
           (a.keySet ++ b.keySet).toSeq.flatMap { k =>

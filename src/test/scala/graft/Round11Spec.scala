@@ -218,7 +218,7 @@ class Round11Spec extends AnyFunSuite {
     val inc = MorLog.incrementalChanges(spark, dir, 1, 2, Seq("id"))
       .select(col("id"), col("change")).as[(Long, String)]
       .collect().toSet
-    val snap = MorLog.changes(spark, dir, 1, 2, Seq("id"))
+    val snap = MorLog.snapshotChanges(spark, dir, 1, 2, Seq("id"))
       .select(col("id"), col("change")).as[(Long, String)]
       .collect().toSet
     assert(inc == snap)
@@ -540,7 +540,7 @@ class Round11Spec extends AnyFunSuite {
         val inc = MorLog.incrementalChanges(spark, dir, vBefore, v,
           Seq("id")).select(col("id"), col("change"))
           .as[(Long, String)].collect().toSet
-        val snap = MorLog.changes(spark, dir, vBefore, v, Seq("id"))
+        val snap = MorLog.snapshotChanges(spark, dir, vBefore, v, Seq("id"))
           .select(col("id"), col("change"))
           .as[(Long, String)].collect().toSet
         assert(inc == snap,
