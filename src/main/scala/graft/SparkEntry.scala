@@ -504,7 +504,7 @@ object SparkEntry {
     "q237_pq_kmeans"        -> ((s, d) => LlmQueries.pqKmeansRecall(s, d)),
     // keyed upsert on the log table: one atomic version per merge
     "q238_morlog_upsert"    -> ((s, d) => CoreQueries.morLogUpsert(s, d)),
-    // change feed spanning upsert+delete versions of the log
+    // change feed spanning upsert+delete versions: the snapshot diff
     "q239_morlog_changes"   -> ((s, d) => CoreQueries.morLogChanges(s, d)),
     // checkpointed drain: one time-travelable version per micro-batch
     "q240_morlog_stream"    -> ((s, d) => CoreQueries.morLogStream(s, d)),

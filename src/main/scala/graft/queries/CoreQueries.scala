@@ -3106,10 +3106,13 @@ object CoreQueries {
     * the q238 fixture — one call classifies insert/update/delete at
     * key granularity across an upsert AND a delete (any number of
     * intervening versions, including value-invisible compactions,
-    * fold away). */
+    * fold away). This is the snapshot-diff form
+    * ([[graft.sink.MorLog.snapshotChanges]]); `MorLog.changes` reads
+    * this keyed span through q241's log-delta form, so q239 keeps the
+    * second, independent implementation under the shared oracle. */
   def morLogChanges(s: SparkSession, d: String): DataFrame = {
     val dir = morLogUpserted(s, d)
-    graft.sink.MorLog.changes(s, dir, 0, 2, Seq("user_id"))
+    graft.sink.MorLog.snapshotChanges(s, dir, 0, 2, Seq("user_id"))
       .select(col("user_id"), col("change"),
         col("_old.val").as("old_val"), col("_new.val").as("new_val"))
   }
@@ -3860,7 +3863,8 @@ object CoreQueries {
     * files added per version and tombstone-set growth — never from
     * snapshot scans ([[graft.sink.MorLog.incrementalChanges]]):
     * O(changed data + affected files) at any table size, the 100 TB
-    * CDC-subscription form. Shares q239's oracle verbatim — two
+    * CDC-subscription form, and what `MorLog.changes` runs for this
+    * span. Shares q239's (snapshot-diff) oracle verbatim — two
     * implementations, one truth. */
   def morLogCdf(s: SparkSession, d: String): DataFrame = {
     val dir = morLogUpserted(s, d)

@@ -239,43 +239,27 @@ private[graft] object LocalParquet {
 
   /** A flat (string key, long value) parquet set — a tombstone set's
     * (file, row_idx) — decoded driver-side as key → sorted values,
-    * under the same byte/row caps as [[readLocal]]. None above them,
-    * or on a missing column or any read error: the caller keeps its
-    * distributed read. Not cached: the row cache's per-row form cost
-    * measurable retained heap, and decoding a set under the caps takes
+    * under the same caps as [[readLocal]]. None above them, or on a
+    * missing or mistyped column: the caller keeps its distributed
+    * read. Not cached: the row cache's per-row form cost measurable
+    * retained heap, and decoding a set under the caps takes
     * milliseconds. */
   def readLongsByKey(spark: SparkSession, conf: Configuration,
                      parts: Seq[String], keyCol: String,
                      valCol: String): Option[Map[String, Array[Long]]] =
-    scala.util.Try {
-      val fs = new Path(parts.head).getFileSystem(conf)
-      if (parts.map(p => fs.getFileStatus(new Path(p)).getLen).sum >
-          maxBytes(spark) ||
-          footerRowCount(conf, parts) > maxRows(spark)) return None
-      val acc = scala.collection.mutable.HashMap
-        .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
-      parts.foreach { p =>
-        val reader = groupReader(conf, new Path(p))
-        try {
-          var g: Group = reader.read()
-          if (g != null) {
-            val ki = g.getType.getFieldIndex(keyCol)
-            val vi = g.getType.getFieldIndex(valCol)
-            while (g != null) {
-              acc.getOrElseUpdate(g.getString(ki, 0),
-                new scala.collection.mutable.ArrayBuilder.ofLong) +=
-                g.getLong(vi, 0)
-              g = reader.read()
-            }
-          }
-        } finally reader.close()
-      }
-      acc.iterator.map { case (k, b) =>
-        val a = b.result()
-        java.util.Arrays.sort(a)
-        k -> a
-      }.toMap
-    }.toOption
+    if (parts.isEmpty) None
+    else decode(spark, conf, parts).flatMap { case (schema, rows) =>
+      val (ki, vi) = (schema.fieldNames.indexOf(keyCol),
+        schema.fieldNames.indexOf(valCol))
+      if (ki < 0 || vi < 0 || schema(ki).dataType != StringType ||
+          schema(vi).dataType != LongType) None
+      else Some(rows.groupBy(_.getUTF8String(ki).toString).map {
+        case (k, rs) =>
+          val a = rs.iterator.map(_.getLong(vi)).toArray
+          java.util.Arrays.sort(a)
+          k -> a
+      })
+    }
 
   /** Pre-seed the cache for files a writer just produced whose rows
     * it already holds driver-side (sidecar folds) — the next

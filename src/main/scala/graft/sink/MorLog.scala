@@ -1499,18 +1499,6 @@ object MorLog {
       Sidecars.partFiles(spark, s"$dir/$LogDir",
         tombsName(st.tombsV, st.tombsUid)))).toOption
 
-  /** `st`'s broadcast-tier tombstone set decoded on the driver as
-    * file name → sorted row indexes, with no Spark job: an empty map
-    * when the state has no such set, None when it sits above the
-    * [[LocalParquet]] caps (the caller then keeps its distributed
-    * plan). */
-  private def tombsLocal(spark: SparkSession, dir: String,
-                         st: State): Option[Map[String, Array[Long]]] =
-    if (st.tombsV < 0) Some(Map.empty)
-    else LocalParquet.readLongsByKey(spark, conf(spark),
-      Sidecars.partFiles(spark, s"$dir/$LogDir",
-        tombsName(st.tombsV, st.tombsUid)), FileCol, RowCol)
-
   /** A (file, row_idx) plan over a subset of `bound`'s broadcast-tier
     * set, collected as file name → sorted row indexes under the
     * driver cap. When `bound`'s footer count already fits the cap the
@@ -1533,46 +1521,48 @@ object MorLog {
     }
   }
 
-  private def guardRowMap(cap: Long, what: String,
-                          m: Map[String, Array[Long]])
-      : Map[String, Array[Long]] = {
-    guardDriverRows(cap, what, m.valuesIterator.map(_.length.toLong).sum)
-    m
-  }
-
-  /** `st`'s broadcast-tier tombstones on the files `names`, as file
-    * name → sorted row indexes — decoded on the driver with no job
-    * under the [[LocalParquet]] caps, one capped distributed collect
-    * above them. */
-  private def tombsRowsOf(spark: SparkSession, dir: String, st: State,
-                          names: Seq[String], cap: Long,
-                          what: String): Map[String, Array[Long]] =
-    tombsLocal(spark, dir, st) match {
-      case Some(all) =>
-        guardRowMap(cap, what, names.iterator.flatMap(n =>
-          all.get(n).map(n -> _)).toMap)
-      case None =>
-        collectTombRows(spark, dir,
-          tombsOf(spark, dir, st).get
-            .filter(col(FileCol).isInCollection(names)), st, cap, what)
+  /** A state's broadcast-tier tombstone set decoded on the driver as
+    * file name → sorted row indexes, with no Spark job: an empty map
+    * when the state has no such set, None when it sits above the
+    * [[LocalParquet]] caps (the caller then keeps its distributed
+    * plan). Made once per span read, whose states are passed in
+    * version order: the last decoded set is kept, so each
+    * intermediate set is decoded once, not as both one version's `st`
+    * and the next one's `prev`. */
+  private def spanTombsLocal(spark: SparkSession, dir: String)
+      : State => Option[Map[String, Array[Long]]] = {
+    var last: ((Int, String), Option[Map[String, Array[Long]]]) = null
+    st => {
+      val k = (st.tombsV, st.tombsUid)
+      if (last == null || last._1 != k)
+        last = k -> (if (st.tombsV < 0) Some(Map.empty)
+          else LocalParquet.readLongsByKey(spark, conf(spark),
+            Sidecars.partFiles(spark, s"$dir/$LogDir",
+              tombsName(st.tombsV, st.tombsUid)), FileCol, RowCol))
+      last._2
     }
+  }
 
   /** The broadcast-tier tombstones `st` holds and `prev` does not, as
     * file name → sorted row indexes. Under the [[LocalParquet]] caps
-    * both sets decode on the driver and the difference is taken there
-    * (no Spark job); above them a distributed `exceptAll` is collected
-    * under the driver cap. */
+    * both sets decode on the driver (through `local`, a
+    * [[spanTombsLocal]]) and the difference is taken there (no Spark
+    * job); above them a distributed `exceptAll` is collected under
+    * the driver cap. */
   private def tombsAdded(spark: SparkSession, dir: String, prev: State,
-                         st: State, cap: Long,
-                         what: String): Map[String, Array[Long]] =
+                         st: State, cap: Long, what: String,
+                         local: State => Option[Map[String, Array[Long]]])
+      : Map[String, Array[Long]] =
     if (st.tombsV < 0) Map.empty
-    else (tombsLocal(spark, dir, st), tombsLocal(spark, dir, prev)) match {
-      case (Some(now), Some(old)) =>
-        guardRowMap(cap, what, now.iterator.flatMap { case (n, rows) =>
+    else (local(prev), local(st)) match {
+      case (Some(old), Some(now)) =>
+        val added = now.iterator.flatMap { case (n, rows) =>
           val o = old.getOrElse(n, Array.emptyLongArray)
           val add = rows.filter(java.util.Arrays.binarySearch(o, _) < 0)
           if (add.isEmpty) None else Some(n -> add)
-        }.toMap)
+        }.toMap
+        guardDriverRows(cap, what, added.valuesIterator.map(_.length).sum)
+        added
       case _ =>
         val newT = tombsOf(spark, dir, st).get
         collectTombRows(spark, dir, tombsOf(spark, dir, prev) match {
@@ -2888,6 +2878,44 @@ object MorLog {
   final case class MergeClause(cond: Option[String], action: String,
                                assigns: Seq[(String, String)] = Seq.empty)
 
+  /** True when a clause merge cannot write a key other than the
+    * matched one, so the table stays unique on `targetKeys`: update
+    * clauses leave each target key unassigned or assign it its own
+    * value (`t.k`, or the paired source key when matched), and insert
+    * clauses assign each target key its paired source key. A merge
+    * that fails this commits under a `rekey:` tag, which
+    * [[changes]] does not read from the log's deltas. */
+  private def clausesKeepKeys(spark: SparkSession, targetKeys: Seq[String],
+                              sourceKeys: Seq[String],
+                              matched: Seq[MergeClause],
+                              notMatched: Seq[MergeClause],
+                              notMatchedBySource: Seq[MergeClause])
+      : Boolean = {
+    val sameName: (String, String) => Boolean =
+      if (spark.conf.get("spark.sql.caseSensitive", "false").toBoolean)
+        _ == _
+      else _.equalsIgnoreCase(_)
+    def refersTo(x: String, side: String, c: String): Boolean =
+      scala.util.Try(org.apache.spark.sql.catalyst.parser
+        .CatalystSqlParser.parseExpression(x)).toOption.exists {
+        case org.apache.spark.sql.catalyst.analysis
+            .UnresolvedAttribute(Seq(q, n)) =>
+          sameName(q, side) && sameName(n, c)
+        case _ => false
+      }
+    def assigned(c: MergeClause, k: String): Option[String] =
+      c.assigns.collectFirst { case (n, x) if n == k => x }
+    val pairs = targetKeys.zip(sourceKeys)
+    matched.filter(_.action == "update").forall(c => pairs.forall {
+      case (tk, sk) => assigned(c, tk).forall(x =>
+        refersTo(x, "t", tk) || refersTo(x, "s", sk)) }) &&
+      notMatchedBySource.filter(_.action == "update").forall(c =>
+        targetKeys.forall(tk =>
+          assigned(c, tk).forall(refersTo(_, "t", tk)))) &&
+      notMatched.forall(c => pairs.forall { case (tk, sk) =>
+        assigned(c, tk).exists(refersTo(_, "s", sk)) })
+  }
+
   /** FULL-CLAUSE MERGE over the log tier — the engine under both
     * [[mergeIntoWhen]] (the SET-star/INSERT-star form) and SQL `MERGE INTO`
     * ([[graft.plans.MorLogDmlStrategy]]): ordered WHEN MATCHED
@@ -2925,7 +2953,9 @@ object MorLog {
     * range ∧ membership, ANDed) and the classification join
     * exact-matches the whole tuple; everything else — broadcast
     * O(batch) classification, one committed version, OCC — is
-    * unchanged from the single-key form, which is the 1-tuple case. */
+    * unchanged from the single-key form, which is the 1-tuple case.
+    * A merge whose clauses may write a key other than the matched one
+    * ([[clausesKeepKeys]]) commits under `rekey:<actionTag>`. */
   def mergeIntoClausesKeys(spark: SparkSession, dir: String,
                            source: DataFrame, targetKeys: Seq[String],
                            sourceKeys: Seq[String],
@@ -3123,8 +3153,12 @@ object MorLog {
             if (nUpdM + nMDel == 0 && notMatchedBySource.isEmpty)
               (0L, st.tombsV, st.tombsUid, st.pfCeil)
             else commitTombs(spark, dir, st, victims, v)
+          val tag =
+            if (clausesKeepKeys(spark, targetKeys, sourceKeys, matched,
+                notMatched, notMatchedBySource)) actionTag
+            else s"rekey:$actionTag"
           try writeState(spark, dir,
-            State(v, actionTag, tombsV, pfCeil, st.schema,
+            State(v, tag, tombsV, pfCeil, st.schema,
               st.files ++ names, tombsUid), st.files)
           catch { case e: CommitConflictException =>
             retractTombs(spark, dir, st, pfCeil); throw e
@@ -3282,8 +3316,9 @@ object MorLog {
     val names = scan.map(n => new Path(resolvePath(dir, n)).getName)
     val bTombs: Map[String, Array[Long]] =
       if (st.tombsV < 0 || !withTombs) Map.empty
-      else tombsRowsOf(spark, dir, st, names, cdfCapOf(spark, dir),
-        "connector scan")
+      else collectTombRows(spark, dir, tombsOf(spark, dir, st).get
+          .filter(col(FileCol).isInCollection(names)), st,
+        cdfCapOf(spark, dir), "connector scan")
     (st.schema, scan.map(n => resolvePath(dir, n)),
       st.schema.fields.map(f => f.name -> physOf(f)).toMap,
       bTombs, st.pfCeil, skip.size)
@@ -3309,13 +3344,15 @@ object MorLog {
     * pair; netting across versions is the consumer's GROUP BY, or
     * [[incrementalChanges]] on the Scala side). Everything here is
     * METADATA work: file-list diffs off cached states, sidecar-gen
-    * maps, and the broadcast tier's tombstone deltas, which come from
-    * the same [[tombsAdded]]/[[tombsRowsOf]] helpers as
-    * [[incrementalChanges]] — decoded on the driver with no Spark job
-    * under the [[LocalParquet]] caps, one capped distributed collect
-    * above them. The row payloads stay in the per-file partitions the
-    * scan plans. Compactions/clusterings contribute nothing;
-    * RESTORE/RENAME inside the span and the broadcast→per-file
+    * maps, and the broadcast tier's tombstones: each version's added
+    * set comes from [[tombsAdded]], as in [[incrementalChanges]]
+    * (decoded on the driver with no Spark job under the
+    * [[LocalParquet]] caps, one capped distributed collect above
+    * them), and a removed file's standing rows from one capped
+    * collect of the set filtered to the removed names
+    * ([[collectTombRows]]). The row payloads stay in the per-file
+    * partitions the scan plans. Compactions/clusterings contribute
+    * nothing; RESTORE/RENAME inside the span and the broadcast→per-file
     * migration crossing (whose delta is O(total set)) are rejected
     * loud — consume those spans via [[MorLog.changes]], which falls
     * back to the snapshot diff for them. */
@@ -3337,6 +3374,7 @@ object MorLog {
       if (fromV < 0) State(-1, "init", -1, -1, toSt.schema, Seq.empty)
       else state(spark, dir, fromV)
     val cdfCap = cdfCapOf(spark, dir)
+    val local = spanTombsLocal(spark, dir)
     val specs = Seq.newBuilder[ChangeFileSpec]
     span.foreach { v =>
       val st = state(spark, dir, v)
@@ -3373,8 +3411,10 @@ object MorLog {
           } else {
             val names = removed.map(e =>
               new Path(resolvePath(dir, e)).getName)
-            val ex = tombsRowsOf(spark, dir, prev, names, cdfCap,
-              s"change span exclude (v$v)")
+            val ex = tombsOf(spark, dir, prev).fold(
+              Map.empty[String, Array[Long]])(t => collectTombRows(spark,
+              dir, t.filter(col(FileCol).isInCollection(names)), prev,
+              cdfCap, s"change span exclude (v$v)"))
             removed.foreach { e =>
               val n = new Path(resolvePath(dir, e)).getName
               specs += ChangeFileSpec(resolvePath(dir, e), v, "delete",
@@ -3397,8 +3437,8 @@ object MorLog {
           }
         } else if (st.pfCeil < 0 && (st.tombsV != prev.tombsV ||
             st.tombsUid != prev.tombsUid) && st.tombsV >= 0) {
-          tombsAdded(spark, dir, prev, st, cdfCap, s"change span (v$v)")
-            .toSeq.sortBy(_._1).foreach { case (n, rows) =>
+          tombsAdded(spark, dir, prev, st, cdfCap, s"change span (v$v)",
+            local).toSeq.sortBy(_._1).foreach { case (n, rows) =>
               byName.get(n).foreach(abs =>
                 specs += ChangeFileSpec(abs, v, "delete", "include",
                   rows, "", ""))
@@ -3423,8 +3463,10 @@ object MorLog {
     * keys unique: the built-in [[KeyedActions]] and the stream drains'
     * `merge:`/`upsert:` tags. Anything else — `append`, `evolve`,
     * `update`, `overwrite`, `restore:`, `rename:`, `clone:`,
-    * `dropcol:`, a DSv2 sink's `sink:` epoch (keyed or append-only
-    * under one tag) — or an empty or gapped span is not. */
+    * `dropcol:`, a clause merge that may write a new key (`rekey:`,
+    * see [[clausesKeepKeys]]), a DSv2 sink's `sink:` epoch (keyed or
+    * append-only under one tag) — or an empty or gapped span is
+    * not. */
   private def keyedSpan(spark: SparkSession, dir: String, fromV: Int,
                         toV: Int): Boolean = {
     val vs = versions(spark, dir)
@@ -3450,10 +3492,14 @@ object MorLog {
     * files that lost rows are read, and broadcast-tier tombstone
     * deltas are taken on the driver with no Spark job. Any other span
     * (a plain append that may duplicate a key, a schema change, an
-    * update that may rewrite a key, a restore, rename, clone, column
-    * drop or sink epoch, or `fromV >= toV`) falls back to the
-    * snapshot diff, which is exact for any history. Either way
-    * `keyCols` must identify a row, as the table's merge key does. */
+    * update or clause merge that may rewrite a key, a restore,
+    * rename, clone, column drop or sink epoch, or `fromV >= toV`)
+    * falls back to the snapshot diff, which is exact for any history.
+    * Either way `keyCols` must identify a row — the key the span's
+    * keyed writes merged on. The log does not record that key, so a
+    * `keyCols` that is only part of a composite merge key is not
+    * detected; neither form is defined for it (the snapshot diff
+    * pairs every old row under a key with every new one). */
   def changes(spark: SparkSession, dir: String, fromV: Int, toV: Int,
               keyCols: Seq[String]): DataFrame =
     if (keyedSpan(spark, dir, fromV, toV))
@@ -3575,6 +3621,7 @@ object MorLog {
          else lit(null)).cast(toSchema(c).dataType).as(c)): _*)
     var prev = state(spark, dir, fromV)
     val cdfCap = cdfCapOf(spark, dir)
+    val local = spanTombsLocal(spark, dir)
     val events = span.flatMap { v =>
       val st = state(spark, dir, v)
       require(!st.action.startsWith("restore:"),
@@ -3613,22 +3660,28 @@ object MorLog {
           // those files. A broadcast-tier delta is taken on the driver
           // ([[tombsAdded]]: no job under the LocalParquet caps,
           // capped like the connector span reads above them); a
-          // per-file-tier delta is already O(files changed) and its
-          // names come from one grouped pass.
+          // per-file-tier delta is already O(files changed), and ONE
+          // grouped pass serves both its names and, at the migration
+          // crossing (a delta of the whole broadcast-tier set, riding
+          // a driver broadcast), the same driver-row guard.
           val lost: Option[(Seq[String], DataFrame)] =
             if (st.pfCeil < 0) {
               if (st.tombsV == prev.tombsV && st.tombsUid == prev.tombsUid)
                 None
               else {
                 val rows = tombsAdded(spark, dir, prev, st, cdfCap,
-                  s"incrementalChanges (v$v)")
+                  s"incrementalChanges (v$v)", local)
                 if (rows.isEmpty) None
                 else Some((rows.keys.toSeq.sorted,
                   tombRowsFrame(spark, rows)))
               }
             } else pfTombsDelta(spark, dir, prev, st).flatMap { delta =>
-              val names = delta.select(col(FileCol)).distinct()
-                .collect().map(_.getString(0)).toSeq.sorted
+              val perFile = delta.groupBy(col(FileCol))
+                .agg(count(lit(1)).as("n")).collect()
+              if (prev.pfCeil < 0)
+                guardDriverRows(cdfCap, s"incrementalChanges (v$v)",
+                  perFile.iterator.map(_.getLong(1)).sum)
+              val names = perFile.map(_.getString(0)).toSeq.sorted
               if (names.isEmpty) None else Some((names, delta))
             }
           val del = lost.map { case (names, delta) =>

@@ -145,4 +145,44 @@ class ChangeFeedRoutingSpec extends AnyFunSuite {
       .select("id", "change").as[(Long, String)].collect().toSet
     assert(got == Set((3L, "update"), (5L, "update")))
   }
+
+  test("a clause merge that can write a new key commits under a rekey tag, and its span falls back to the snapshot diff") {
+    val root = tmp("graft-cfr4-")
+    val dir = s"$root/t"
+    MorLog.create(spark.range(0, 20)
+      .select(col("id"), (col("id") * 10).as("v")).coalesce(1), dir)
+    val c = "cfr_" + java.util.UUID.randomUUID().toString.take(8)
+    spark.conf.set(s"spark.sql.catalog.$c", "graft.sources.MorLogCatalog")
+    spark.conf.set(s"spark.sql.catalog.$c.root", root)
+    Seq((3L, 33L), (100L, 1L)).toDF("id", "v")
+      .createOrReplaceTempView("cfr_keep")
+    spark.sql(s"""MERGE INTO $c.t AS t USING cfr_keep AS s ON t.id = s.id
+      WHEN MATCHED THEN UPDATE SET v = s.v
+      WHEN NOT MATCHED THEN INSERT *""") // v1
+    // the matched row 6 is re-keyed onto 5, which is already taken
+    Seq((6L, 0L)).toDF("id", "v").createOrReplaceTempView("cfr_rekey")
+    spark.sql(s"""MERGE INTO $c.t AS t USING cfr_rekey AS s ON t.id = s.id
+      WHEN MATCHED THEN UPDATE SET id = 5""") // v2
+    // an insert that computes its key is not provably unique either
+    Seq((200L, 2L)).toDF("id", "v").createOrReplaceTempView("cfr_ins")
+    spark.sql(s"""MERGE INTO $c.t AS t USING cfr_ins AS s ON t.id = s.id
+      WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id + 1, s.v)""") // v3
+    MorLog.mergeIntoWhen(spark, dir, Seq((7L, 77L)).toDF("id", "v"), "id",
+      Seq("true" -> "update")) // v4: SET * keeps the key
+    assert((1 to 4).map(MorLog.state(spark, dir, _).action) ==
+      Seq("merge", "rekey:merge", "rekey:merge", "merge"))
+    assert(MorLog.read(spark, dir).filter(col("id") === 5L).count() == 2)
+    for ((f, t) <- Seq((0, 1), (1, 2), (2, 3), (1, 4), (0, 4)))
+      agrees(dir, f, t)
+    // the log-delta form nets the re-keyed row as a plain insert of 5,
+    // where the snapshot diff pairs it with the row already there
+    assert(!same(MorLog.incrementalChanges(spark, dir, 1, 2, Seq("id")),
+      MorLog.snapshotChanges(spark, dir, 1, 2, Seq("id"))))
+    // a keyed span after the re-key still reads from the log: only key
+    // 7 changed (the snapshot diff would also pair the two rows now
+    // under key 5 with each other)
+    assert(MorLog.changes(spark, dir, 3, 4, Seq("id"))
+      .select("id", "change").as[(Long, String)].collect().toSeq ==
+      Seq((7L, "update")))
+  }
 }

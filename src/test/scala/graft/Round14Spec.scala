@@ -455,6 +455,29 @@ class Round14Spec extends AnyFunSuite {
     assert(readAll() == 66, "the guard must not change results")
   }
 
+  test("CDF driver-collect cap: the broadcast-to-per-file migration crossing fails loud over the cap") {
+    val dir = s"${tmp("r14_cap_pf")}/t"
+    MorLog.create(spark.range(0, 100)
+      .select(col("id").as("k"), col("id").as("v")).repartition(2), dir)
+    MorLog.deleteWhere(spark, dir, col("k") % 3 === 0) // v1: broadcast
+    spark.conf.set(graft.sink.DeletionVectors.GuardConfKey, "40")
+    try MorLog.deleteWhere(spark, dir, col("k") % 5 === 0) // v2: migrates
+    finally spark.conf.unset(graft.sink.DeletionVectors.GuardConfKey)
+    assert(MorLog.state(spark, dir, 1).pfCeil < 0 &&
+      MorLog.state(spark, dir, 2).pfCeil >= 0, "v2 must cross the guard")
+    def span() = MorLog.incrementalChanges(spark, dir, 1, 2, Seq("k"))
+    assert(span().count() == 13) // under the cap
+    spark.conf.set(MorLog.CdfCapKey, "10")
+    try {
+      val e = intercept[Throwable](span().count())
+      assert(chain(e).contains("outgrown the broadcast tier"), chain(e))
+      val e2 = intercept[Throwable](
+        MorLog.changes(spark, dir, 1, 2, Seq("k")).count())
+      assert(chain(e2).contains("outgrown the broadcast tier"), chain(e2))
+    } finally spark.conf.unset(MorLog.CdfCapKey)
+    assert(span().count() == 13, "the guard must not change results")
+  }
+
   test("BMP/TIFF/fragmented-MP4 probes: hand-built bytes, truncation and edge encodings") {
     import graft.multimodal.{MultimodalCodecs, VideoCodecs}
     def bmp(w: Int, h: Int, dib: Int = 40): Array[Byte] = {
