@@ -84,7 +84,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // planner: AsofJoinPlan -> merge-scan AsofJoinExec
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     // planner: SQL UPDATE / MERGE INTO over MorLog tables -> the
-    // engine's updateWhere / mergeIntoClauses (strict translation)
+    // engine's updateWhere / mergeIntoClausesKeys (strict translation)
     ext.injectPlannerStrategy(_ => graft.plans.MorLogDmlStrategy)
   }
 }

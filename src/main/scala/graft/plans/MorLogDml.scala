@@ -22,7 +22,7 @@ import graft.sources.MorLogTable
   * pipeline/LoadCustomerDim.json:82-92), so MERGE is the first
   * statement a SQL user writes at a CDC table — and the engine side
   * (pruned locate + OCC + one committed version,
-  * [[graft.sink.MorLog.mergeIntoClauses]] /
+  * [[graft.sink.MorLog.mergeIntoClausesKeys]] /
   * [[graft.sink.MorLog.updateWhere]]) already existed; this is the
   * missing SQL plumbing.
   *
@@ -512,7 +512,7 @@ case class MorLogDeleteExec(table: MorLogTable,
 }
 
 /** `MERGE INTO t USING s ON ... WHEN ...` →
-  * [[graft.sink.MorLog.mergeIntoClauses]] (broadcast clause
+  * [[graft.sink.MorLog.mergeIntoClausesKeys]] (broadcast clause
   * classification over a stats-pruned snapshot, one committed
   * version). */
 case class MorLogMergeExec(table: MorLogTable,

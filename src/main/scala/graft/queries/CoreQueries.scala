@@ -4245,7 +4245,7 @@ object CoreQueries {
     * the reference IS an upsert pipeline (keyed fact sink,
     * reference dataflow/BookingDataTransformation.json:156-186), and
     * these are the statements its SQL users write. The statements
-    * lower onto the engine's [[graft.sink.MorLog.mergeIntoClauses]] /
+    * lower onto the engine's [[graft.sink.MorLog.mergeIntoClausesKeys]] /
     * `updateWhere` through [[graft.plans.MorLogDmlStrategy]] (strict
     * clause translation — the DELETE-bridge lesson), so each lands as
     * ONE committed version with the STATS-PRUNED victim locate

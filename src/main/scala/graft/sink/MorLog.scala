@@ -141,13 +141,6 @@ object MorLog {
   @volatile private[graft] var commitPauseHook: (String, Int) => Unit =
     (_, _) => ()
 
-  /** Re-execute `body` on commit conflicts: each attempt re-reads the
-    * current state, so the op's own `require` checks are the conflict
-    * rules — an append re-lands on the new tip unchanged, a delete
-    * recomputes its victims against the winner's rows, and an op whose
-    * preconditions no longer hold (schema drifted under it) fails
-    * loud. Bounded; a table hot enough to exhaust the retries needs
-    * its writers coordinated, not more spinning. */
   /** Job-description label for every Spark job `f` launches (guide
     * §1.5): the lifecycle ops run many small jobs per commit, and
     * unlabeled they all attribute to the caller's action callsite —
@@ -162,6 +155,13 @@ object MorLog {
     try f finally sc.setJobDescription(prev)
   }
 
+  /** Re-execute `body` on commit conflicts: each attempt re-reads the
+    * current state, so the op's own `require` checks are the conflict
+    * rules — an append re-lands on the new tip unchanged, a delete
+    * recomputes its victims against the winner's rows, and an op whose
+    * preconditions no longer hold (schema drifted under it) fails
+    * loud. Bounded; a table hot enough to exhaust the retries needs
+    * its writers coordinated, not more spinning. */
   private def withOcc[T](spark: SparkSession, dir: String,
                          maxAttempts: Int = 8)(body: => T): T = {
     var attempt = 0
@@ -329,13 +329,8 @@ object MorLog {
     val st = currentState(spark, dir)
     val cur = st.props.getOrElse(tableProps(spark, dir))
     val next = cur ++ set -- unset
-    val v = st.version + 1
-    locked(dir) {
-      checkFree(spark, dir, v)
-      writeState(spark, dir,
-        State(v, "setProperties", st.tombsV, st.pfCeil, st.schema,
-          st.files, st.tombsUid, props = Some(next)), st.files)
-    }
+    commit(spark, dir, st)(t => State(st.version + 1, "setProperties",
+      t.tombsV, t.pfCeil, st.schema, st.files, t.uid, props = Some(next)))
     next
   }
 
@@ -914,12 +909,8 @@ object MorLog {
       val v = st.version + 1
       val names = stageIn(spark, dir,
         batch.select(stagedCast(st): _*), v, partSpecPhys(st))
-      commitPauseHook(dir, v)
-      try writeState(spark, dir,
-        State(v, "overwrite", -1, -1, st.schema, names), st.files)
-      catch { case e: CommitConflictException =>
-        discardStaged(spark, dir, names); throw e
-      }
+      commit(spark, dir, st, names)(_ =>
+        State(v, "overwrite", -1, -1, st.schema, names))
     }
 
   /** Batch columns may be NARROWER than the table (safe upcast on
@@ -951,13 +942,8 @@ object MorLog {
       val v = st.version + 1
       val names = stageIn(spark, dir,
         batch.select(stagedCast(st): _*), v, partSpecPhys(st))
-      commitPauseHook(dir, v)
-      try writeState(spark, dir,
-        State(v, "append", st.tombsV, st.pfCeil, st.schema,
-          st.files ++ names, st.tombsUid), st.files)
-      catch { case e: CommitConflictException =>
-        discardStaged(spark, dir, names); throw e
-      }
+      commit(spark, dir, st, names)(t => State(v, "append", t.tombsV,
+        t.pfCeil, st.schema, st.files ++ names, t.uid))
     }
 
   /** Schema evolution as one version: ADD COLUMN and safe TYPE
@@ -1015,10 +1001,9 @@ object MorLog {
     val gone = colNames.toSet
     val narrowed = StructType(st.schema.fields.filterNot(f =>
       gone.contains(f.name)))
-    commitPauseHook(dir, st.version + 1)
-    writeState(spark, dir,
-      State(st.version + 1, s"dropcol:${colNames.mkString(",")}",
-        st.tombsV, st.pfCeil, narrowed, st.files, st.tombsUid), st.files)
+    commit(spark, dir, st)(t => State(st.version + 1,
+      s"dropcol:${colNames.mkString(",")}", t.tombsV, t.pfCeil, narrowed,
+      st.files, t.uid))
   }
 
   /** METADATA-ONLY RENAME COLUMN (Delta's column-mapping rename, the
@@ -1050,10 +1035,8 @@ object MorLog {
         "rewrite the table to rename it")
     val renamed = StructType(st.schema.fields.map(x =>
       if (x.name == from) x.copy(name = to) else x))
-    commitPauseHook(dir, st.version + 1)
-    writeState(spark, dir,
-      State(st.version + 1, s"rename:$from>$to", st.tombsV, st.pfCeil,
-        renamed, st.files, st.tombsUid), st.files)
+    commit(spark, dir, st)(t => State(st.version + 1, s"rename:$from>$to",
+      t.tombsV, t.pfCeil, renamed, st.files, t.uid))
   }
 
   /** METADATA-ONLY ADD COLUMNS (SQL `ALTER TABLE … ADD COLUMNS`, the
@@ -1091,11 +1074,8 @@ object MorLog {
     val added = newCols.zipWithIndex.map { case (f, i) =>
       if (stamped) stampAdded(f, baseId + 1 + i, v) else f
     }
-    commitPauseHook(dir, v)
-    writeState(spark, dir,
-      State(v, "evolve", st.tombsV, st.pfCeil,
-        StructType(st.schema.fields ++ added), st.files, st.tombsUid),
-      st.files)
+    commit(spark, dir, st)(t => State(v, "evolve", t.tombsV, t.pfCeil,
+      StructType(st.schema.fields ++ added), st.files, t.uid))
   }
 
   def evolveAppend(spark: SparkSession, dir: String,
@@ -1144,13 +1124,8 @@ object MorLog {
           col(f.name).cast(f.dataType).as(physOf(f))
         else lit(null).cast(f.dataType).as(physOf(f))): _*), v,
       partSpecPhys(st))
-    commitPauseHook(dir, v)
-    try writeState(spark, dir,
-      State(v, "evolve", st.tombsV, st.pfCeil, union,
-        st.files ++ names, st.tombsUid), st.files)
-    catch { case e: CommitConflictException =>
-      discardStaged(spark, dir, names); throw e
-    }
+    commit(spark, dir, st, names)(t => State(v, "evolve", t.tombsV,
+      t.pfCeil, union, st.files ++ names, t.uid))
   }
 
   private def withId(df: DataFrame): DataFrame =
@@ -1610,23 +1585,21 @@ object MorLog {
 
   /** Commit `victims` (RPath/RName/RRow rows) as the next tombstone
     * state, MIGRATING to the per-file tier when the accumulated set
-    * crosses the broadcast guard. Returns (newly deleted count,
-    * tombsV, tombsUid, pfCeil) for the caller's meta — the caller
-    * commits the meta. Broadcast-tier sets land in an ATTEMPT-UNIQUE
-    * `tombs_v<v>_<uid>` dir recorded in the meta token: concurrent
-    * attempts (in- or cross-process) stage disjoint dirs, the meta
-    * put-if-absent picks whose is live, and losers'/crashed attempts'
-    * dirs are unreferenced debris for [[vacuum]]'s sweep. */
+    * crosses the broadcast guard. Returns the newly deleted count and
+    * the tombstone pointer for the meta [[commit]] writes next.
+    * Broadcast-tier sets land in an ATTEMPT-UNIQUE `tombs_v<v>_<uid>`
+    * dir recorded in the meta token: concurrent attempts (in- or
+    * cross-process) stage disjoint dirs, the meta put-if-absent picks
+    * whose is live, and losers'/crashed attempts' dirs are
+    * unreferenced debris for [[vacuum]]'s sweep. */
   private def commitTombs(spark: SparkSession, dir: String, st: State,
-                          victims: DataFrame,
-                          v: Int): (Long, Int, String, Int) =
+                          victims: DataFrame, v: Int): Tombs =
     labeled(spark, "morlog:tombs") {
       commitTombs0(spark, dir, st, victims, v)
     }
 
   private def commitTombs0(spark: SparkSession, dir: String, st: State,
-                          victims: DataFrame,
-                          v: Int): (Long, Int, String, Int) = {
+                          victims: DataFrame, v: Int): Tombs = {
     if (st.pfCeil >= 0) {
       // per-file tier: merge only affected files' sidecars, FROM the
       // current version's ceiling (post-restore that may be older
@@ -1643,7 +1616,7 @@ object MorLog {
         victims.select(col(RPath).as(FileCol), col(RRow).as(RowCol)),
         gc = false, baseCeil = st.pfCeil, nextGen = gen)
       val ceil = if (added > 0) gen else st.pfCeil
-      (added, -1, "", ceil)
+      Tombs(added, -1, "", ceil)
     } else {
       val prev = tombsOf(spark, dir, st)
       // exact prior count from parquet FOOTERS — the set was written
@@ -1673,7 +1646,7 @@ object MorLog {
       val n = LocalParquet.footerRowCount(conf(spark),
         Sidecars.partFiles(spark, s"$dir/$LogDir",
           tombsName(v, uid)))
-      if (n == prevN) (0L, st.tombsV, st.tombsUid, -1)
+      if (n == prevN) Tombs(0L, st.tombsV, st.tombsUid, -1)
       else if (n > guard(spark)) {
         // guard crossing: the whole set lands per-file ONCE; every
         // later batch is O(changed files). Gen numbering continues
@@ -1688,8 +1661,8 @@ object MorLog {
           written.select(
             concat(lit(s"$dir/"), col(FileCol)).as(FileCol),
             col(RowCol)), gen, n)
-        (n - prevN, -1, "", gen)
-      } else (n - prevN, v, uid, -1)
+        Tombs(n - prevN, -1, "", gen)
+      } else Tombs(n - prevN, v, uid, -1)
     }
   }
 
@@ -1697,8 +1670,9 @@ object MorLog {
     * state landing ([[commitTombs]]) and the meta swap — the window a
     * cross-process rival's commit turns this writer into a loser with
     * an already-written marker. A spec lands a rival commit here to
-    * pin the loser's marker retraction deterministically (invoked by
-    * [[deleteWhereOnce]]; every site shares [[retractTombs]]). */
+    * pin the loser's marker retraction deterministically. Invoked by
+    * [[commit]] for every write that carries victims (delete, update,
+    * upsert, the merges and keyed sink epochs). */
   @volatile private[graft] var tombsCommittedHook: (String, Int) => Unit =
     (_, _) => ()
 
@@ -1711,6 +1685,58 @@ object MorLog {
                            pfCeil: Int): Unit =
     if (pfCeil >= 0 && pfCeil != st.pfCeil)
       DvPerFile.retractMarker(conf(spark), dir, pfCeil)
+
+  /** What a commit's tombstone step landed: rows newly deleted and the
+    * tombstone pointer the new meta records — the base state's own
+    * when the commit carries no victims. */
+  private final case class Tombs(added: Long, tombsV: Int, uid: String,
+                                 pfCeil: Int)
+
+  /** THE commit step: every write that advances a table past version 0
+    * lands through here, in this order —
+    *
+    *   1. `pause`   [[commitPauseHook]];
+    *   2. `lock`    with victims only, the in-process [[locked]]
+    *                section, holding steps 3-6;
+    *   3. `free`    [[checkFree]] (with victims only);
+    *   4. `tombs`   [[commitTombs]] lands the victims' tombstones;
+    *   5. `hook`    [[tombsCommittedHook]] (with victims only);
+    *   6. `meta`    [[writeState]]'s put-if-absent, the commit point;
+    *   7. on a [[CommitConflictException]]: `retract` ([[retractTombs]])
+    *      then `discard` ([[discardStaged]] of `staged`), and the
+    *      conflict rethrows to [[withOcc]].
+    *
+    * `next` builds the new version's state from the tombstone pointer
+    * (`st`'s own without victims); `commitIf` false after step 4 skips
+    * the meta (a delete that found no row commits nothing). Returns the
+    * tombstone step's result. */
+  private def commit(spark: SparkSession, dir: String, st: State,
+                     staged: Seq[String] = Seq.empty,
+                     victims: Option[DataFrame] = None,
+                     commitIf: Tombs => Boolean = _ => true)
+                    (next: Tombs => State): Tombs = {
+    val v = st.version + 1
+    def meta(t: Tombs): Tombs = {
+      if (commitIf(t))
+        try writeState(spark, dir, next(t), st.files)
+        catch { case e: CommitConflictException =>
+          retractTombs(spark, dir, st, t.pfCeil); throw e
+        }
+      t
+    }
+    commitPauseHook(dir, v)
+    try victims match {
+      case None => meta(Tombs(0L, st.tombsV, st.tombsUid, st.pfCeil))
+      case Some(vs) => locked(dir) {
+        checkFree(spark, dir, v)
+        val t = commitTombs(spark, dir, st, vs, v)
+        tombsCommittedHook(dir, v)
+        meta(t)
+      }
+    } catch { case e: CommitConflictException =>
+      discardStaged(spark, dir, staged); throw e
+    }
+  }
 
   /** DELETE WHERE as one version: tombstones accumulate — full
     * snapshot per version in the broadcast tier, affected-file
@@ -1746,22 +1772,6 @@ object MorLog {
     MorLogStats.lastLocateScanned = scanFiles.size
     MorLogStats.lastLocateSkipped = st.files.size - scanFiles.size
     if (dropped.isEmpty && scanFiles.isEmpty) return 0L
-    val v = st.version + 1
-    commitPauseHook(dir, v)
-    locked(dir) {
-    checkFree(spark, dir, v)
-    val (added, tombsV, tombsUid, pfCeil) =
-      if (scanFiles.isEmpty) (0L, st.tombsV, st.tombsUid, st.pfCeil)
-      else {
-        val visible = minusTombs(spark, dir, st,
-          readFilesWithId(spark, dir, st, scanFiles))
-        val victims = visible.filter(coalesce(cond, lit(false)))
-          .select(col(RPath), col(RName), col(RRow))
-        val r = commitTombs(spark, dir, st, victims, v)
-        tombsCommittedHook(dir, v)
-        r
-      }
-    if (added == 0 && dropped.isEmpty) return 0L
     // dropped files' newly deleted rows = stats row count − their
     // tombstones at the PRE-delete state, all from metadata
     val droppedRows =
@@ -1786,14 +1796,17 @@ object MorLog {
         dropped.map(f => FileStats.rowsOf(stats, f).getOrElse(0L) -
           tombCounts.getOrElse(nameOf(f), 0L)).sum
       }
-    try writeState(spark, dir,
-      State(v, "delete", tombsV, pfCeil, st.schema, remaining, tombsUid),
-      st.files)
-    catch { case e: CommitConflictException =>
-      retractTombs(spark, dir, st, pfCeil); throw e
-    }
-    added + droppedRows
-    }
+    val victims =
+      if (scanFiles.isEmpty) None
+      else Some(minusTombs(spark, dir, st,
+          readFilesWithId(spark, dir, st, scanFiles))
+        .filter(coalesce(cond, lit(false)))
+        .select(col(RPath), col(RName), col(RRow)))
+    val t = commit(spark, dir, st, victims = victims,
+        commitIf = _.added > 0 || dropped.nonEmpty)(t =>
+      State(st.version + 1, "delete", t.tombsV, t.pfCeil, st.schema,
+        remaining, t.uid))
+    if (t.added == 0 && dropped.isEmpty) 0L else t.added + droppedRows
   }
 
   /** UPDATE WHERE as one version (SQL `UPDATE t SET … WHERE …` over
@@ -1846,21 +1859,11 @@ object MorLog {
             amap.getOrElse(f.name, col(f.name))
               .cast(f.dataType).as(f.name)): _*)
           .select(stagedCast(st): _*), v, partSpecPhys(st))
-      commitPauseHook(dir, v)
-      try locked(dir) {
-        checkFree(spark, dir, v)
-        val (_, tombsV, tombsUid, pfCeil) = commitTombs(spark, dir, st,
-          victims.select(col(RPath), col(RName), col(RRow)), v)
-        try writeState(spark, dir,
-          State(v, actionTag, tombsV, pfCeil, st.schema,
-            st.files ++ names, tombsUid), st.files)
-        catch { case e: CommitConflictException =>
-          retractTombs(spark, dir, st, pfCeil); throw e
-        }
-        n
-      } catch { case e: CommitConflictException =>
-        discardStaged(spark, dir, names); throw e
-      }
+      commit(spark, dir, st, names,
+          Some(victims.select(col(RPath), col(RName), col(RRow))))(t =>
+        State(v, actionTag, t.tombsV, t.pfCeil, st.schema,
+          st.files ++ names, t.uid))
+      n
     } finally victims.unpersist()
   }
 
@@ -1876,12 +1879,8 @@ object MorLog {
       val names = stageIn(spark, dir,
         toPhysical(st, readVersion(spark, dir, st.version)), v,
         partSpecPhys(st))
-      commitPauseHook(dir, v)
-      try writeState(spark, dir,
-        State(v, "compact", -1, -1, st.schema, names), st.files)
-      catch { case e: CommitConflictException =>
-        discardStaged(spark, dir, names); throw e
-      }
+      commit(spark, dir, st, names)(_ =>
+        State(v, "compact", -1, -1, st.schema, names))
       st.files.size
     }
 
@@ -2008,36 +2007,31 @@ object MorLog {
     val v = st.version + 1
     val packed = stageIn(spark, dir,
       toPhysical(st, layout(visible, nOut)), v, partSpecPhys(st))
-    commitPauseHook(dir, v)
-    try locked(dir) {
-      checkFree(spark, dir, v)
-      // tombstone entries of the packed files fold away with the
-      // rewrite; kept files' entries carry into the new version's set.
-      // Per-file tier: nothing to rewrite at all — the ceiling carries
-      // over and only scanned (kept) files' sidecars are ever probed.
-      val (newTombsV, newUidV) =
-        if (st.pfCeil >= 0) (-1, "")
-        else tombsOf(spark, dir, st) match {
-          case None => (-1, "")
-          case Some(t) =>
-            val kept = t.filter(col(FileCol).isInCollection(keepNames))
-              .persist()
-            try {
-              if (kept.isEmpty) (-1, "")
-              else {
-                val uid = newUid()
-                kept.coalesce(1).write.mode("overwrite")
-                  .parquet(tombsDir(dir, v, uid))
-                (v, uid)
-              }
-            } finally kept.unpersist()
-        }
-      writeState(spark, dir,
-        State(v, action, newTombsV, st.pfCeil, st.schema,
-          keepNames ++ packed, newUidV), st.files)
-    } catch { case e: CommitConflictException =>
-      discardStaged(spark, dir, packed); throw e
-    }
+    // tombstone entries of the packed files fold away with the
+    // rewrite; kept files' entries carry into the new version's set,
+    // staged (like the data) in an attempt-unique dir a lost attempt
+    // leaves as debris. Per-file tier: nothing to rewrite at all — the
+    // ceiling carries over and only scanned (kept) files' sidecars are
+    // ever probed.
+    val (newTombsV, newUidV) =
+      if (st.pfCeil >= 0) (-1, "")
+      else tombsOf(spark, dir, st) match {
+        case None => (-1, "")
+        case Some(t) =>
+          val kept = t.filter(col(FileCol).isInCollection(keepNames))
+            .persist()
+          try {
+            if (kept.isEmpty) (-1, "")
+            else {
+              val uid = newUid()
+              kept.coalesce(1).write.mode("overwrite")
+                .parquet(tombsDir(dir, v, uid))
+              (v, uid)
+            }
+          } finally kept.unpersist()
+      }
+    commit(spark, dir, st, packed)(_ => State(v, action, newTombsV,
+      st.pfCeil, st.schema, keepNames ++ packed, newUidV))
     chosen.size
   }
 
@@ -2065,12 +2059,8 @@ object MorLog {
       val v = st.version + 1
       val names = stageIn(spark, dir, toPhysical(st, clustered), v,
         partSpecPhys(st))
-      commitPauseHook(dir, v)
-      try writeState(spark, dir,
-        State(v, "cluster", -1, -1, st.schema, names), st.files)
-      catch { case e: CommitConflictException =>
-        discardStaged(spark, dir, names); throw e
-      }
+      commit(spark, dir, st, names)(_ =>
+        State(v, "cluster", -1, -1, st.schema, names))
       st.files.size
     }
 
@@ -2522,47 +2512,32 @@ object MorLog {
     visible.filter(cond)
   }
 
-  /** Keyed MoR UPSERT as ONE committed version: tombstone the current
-    * visible rows whose `keyCol` appears in `batch`, append the batch
-    * — both under a single meta swap, so a reader sees the whole
-    * merge or none of it, and the pre-merge snapshot stays one
-    * `readVersion` away. `batch` must be unique on the key (checked).
-    * `actionTag` lets a streaming drain fence replays (see
-    * [[applyStreamBatch]]). */
   /** Key-membership cap for the victim-locate prune: batches up to
     * this many distinct keys prune with exact per-file membership
     * (stats `In`), larger ones with the key RANGE alone. */
   private[graft] val LocateInCapKey = "graft.morlog.locateInCap"
 
   /** Victim-locate file prune for the keyed mutating ops
-    * ([[upsert]] / [[mergeInto]] / [[mergeIntoWhen]]): the files that
-    * can hold a CURRENT row of any batch key, off the log's per-file
-    * stats — the same skipping [[readWhere]] applies to reads. The
-    * batch key set is broadcast-small by construction (it is the
-    * locate semi-join's build side), so collecting it is O(batch).
-    * The prune predicate puts the key-RANGE check first (O(1) per
-    * file — out-of-range files never pay the membership walk) and
-    * exact membership second, capped at [[LocateInCapKey]] keys
-    * (above the cap the range alone prunes; a batch that large
-    * touches most files anyway). Files without stats always scan;
-    * NULL batch keys locate nothing (the semi-join is
-    * null-rejecting). Turns the per-batch locate from O(table rows)
-    * into O(files containing batch keys) — the difference between a
-    * streaming MERGE drain that re-reads the table's key column every
+    * ([[upsert]] / [[mergeInto]] / the clause engine / keyed sink
+    * epochs): the files that can hold a CURRENT row of any batch key
+    * tuple, off the log's per-file stats — the same skipping
+    * [[readWhere]] applies to reads. A file can hold a matching row
+    * only if EVERY key column's value set intersects it, so the prune
+    * predicate is the AND of each column's (range ∧ membership) — a
+    * sound per-column relaxation of tuple membership (it can
+    * over-select, never under-select). `pairs` maps target column →
+    * the batch frame's column carrying its values. The batch key set
+    * is broadcast-small by construction (it is the locate semi-join's
+    * build side), so collecting it is O(batch); exact membership is
+    * capped at [[LocateInCapKey]] keys (above the cap the range alone
+    * prunes; a batch that large touches most files anyway). Files
+    * without stats always scan; rows where ANY key column is NULL
+    * locate nothing (the victim joins are null-rejecting on every
+    * key). Turns the per-batch locate from O(table rows) into O(files
+    * containing batch keys) — the difference between a streaming
+    * MERGE drain that re-reads the table's key column every
     * micro-batch and one that opens the handful of files its keys
     * live in. */
-  private def locateFiles(spark: SparkSession, dir: String, st: State,
-                          keyCol: String, keys: DataFrame): Seq[String] =
-    locateFilesKeys(spark, dir, st, Seq(keyCol -> keyCol), keys)
-
-  /** Tuple-key form of the victim locate: a file can hold a matching
-    * row only if EVERY key column's value set intersects it, so the
-    * prune predicate is the AND of each column's (range ∧ membership)
-    * — a sound per-column relaxation of tuple membership (it can
-    * over-select, never under-select). `pairs` maps target column →
-    * the batch frame's column carrying its values. Rows where ANY key
-    * column is NULL locate nothing (the victim joins are
-    * null-rejecting on every key). */
   private def locateFilesKeys(spark: SparkSession, dir: String,
                               st: State, pairs: Seq[(String, String)],
                               keys: DataFrame): Seq[String] =
@@ -2619,60 +2594,33 @@ object MorLog {
     scan
   }
 
+  /** Victims of a keyed write: the CURRENT visible rows whose key
+    * tuple appears in `keys` — the stats-pruned locate
+    * ([[locateFilesKeys]]), then one broadcast semi-join over only the
+    * located files. None when no file can hold a key. */
+  private def keyedVictims(spark: SparkSession, dir: String, st: State,
+                           keyCols: Seq[String],
+                           keys: DataFrame): Option[DataFrame] = {
+    val files = locateFilesKeys(spark, dir, st, keyCols.map(k => k -> k),
+      keys)
+    if (files.isEmpty) None
+    else Some(minusTombs(spark, dir, st,
+        readFilesWithId(spark, dir, st, files))
+      .join(broadcast(keys), keyCols, "left_semi")
+      .select(col(RPath), col(RName), col(RRow)))
+  }
+
+  /** Keyed MoR UPSERT as ONE committed version: tombstone the current
+    * visible rows whose `keyCol` appears in `batch`, append the batch
+    * — both under a single meta swap, so a reader sees the whole
+    * merge or none of it, and the pre-merge snapshot stays one
+    * `readVersion` away. `batch` must be unique and non-NULL on the
+    * key (checked). `actionTag` lets a streaming drain fence replays
+    * (see [[applyStreamBatch]]). [[mergeInto]] with no delete rows. */
   def upsert(spark: SparkSession, dir: String, batch: DataFrame,
              keyCol: String, actionTag: String = "upsert"): Unit =
     withOcc(spark, dir) {
-      val st = currentState(spark, dir)
-      require(batch.columns.toSet == st.schema.fieldNames.toSet,
-        s"upsert: batch columns ${batch.columns.toSeq.sorted} drift from " +
-          s"the table's ${st.schema.fieldNames.toSeq.sorted}")
-      requireUpcastOnly(st, batch, "upsert")
-      val keys = batch.select(col(keyCol)).distinct().persist()
-      try {
-        val nKeys = keys.count()
-        require(nKeys == batch.count(),
-          s"upsert: batch is not unique on $keyCol")
-        val v = st.version + 1
-        if (nKeys == 0) {
-          // zero-row batch: commit a data-less version so a stream
-          // fence still lands (no empty data files written)
-          commitPauseHook(dir, v)
-          writeState(spark, dir,
-            State(v, actionTag, st.tombsV, st.pfCeil, st.schema,
-              st.files, st.tombsUid), st.files)
-        } else {
-          // staging happens OUTSIDE the commit section (attempt-unique
-          // names can't collide); the tombstone commit and the meta
-          // swap are the serialized part
-          val names = stageIn(spark, dir,
-            batch.select(stagedCast(st): _*), v, partSpecPhys(st))
-          // stats-pruned victim locate: only files that can hold a
-          // batch key are opened, not the whole table
-          val scanFiles = locateFiles(spark, dir, st, keyCol, keys)
-          commitPauseHook(dir, v)
-          try locked(dir) {
-            checkFree(spark, dir, v)
-            val (_, tombsV, tombsUid, pfCeil) =
-              if (scanFiles.isEmpty) (0L, st.tombsV, st.tombsUid, st.pfCeil)
-              else {
-                val visible = minusTombs(spark, dir, st,
-                  readFilesWithId(spark, dir, st, scanFiles))
-                val victims = visible
-                  .join(broadcast(keys), Seq(keyCol), "left_semi")
-                  .select(col(RPath), col(RName), col(RRow))
-                commitTombs(spark, dir, st, victims, v)
-              }
-            try writeState(spark, dir,
-              State(v, actionTag, tombsV, pfCeil, st.schema,
-                st.files ++ names, tombsUid), st.files)
-            catch { case e: CommitConflictException =>
-              retractTombs(spark, dir, st, pfCeil); throw e
-            }
-          } catch { case e: CommitConflictException =>
-            discardStaged(spark, dir, names); throw e
-          }
-        }
-      } finally keys.unpersist()
+      mergeIntoOnce(spark, dir, batch, keyCol, None, actionTag)
     }
 
   /** MERGE INTO as ONE committed version (Delta's MERGE, the CDC-apply
@@ -2690,72 +2638,64 @@ object MorLog {
                 keyCol: String, opCol: String,
                 actionTag: String = "merge"): (Long, Long) =
     withOcc(spark, dir) {
-      mergeIntoOnce(spark, dir, batch, keyCol, opCol, actionTag)
+      mergeIntoOnce(spark, dir, batch, keyCol, Some(opCol), actionTag)
     }
 
+  /** The keyed kernel under [[upsert]] (`opCol` None: every row
+    * upserts) and [[mergeInto]]. */
   private def mergeIntoOnce(spark: SparkSession, dir: String,
                             batch: DataFrame, keyCol: String,
-                            opCol: String,
+                            opCol: Option[String],
                             actionTag: String): (Long, Long) = {
     val st = currentState(spark, dir)
-    require(batch.columns.toSet == st.schema.fieldNames.toSet + opCol,
-      s"mergeInto: batch columns ${batch.columns.toSeq.sorted} must be " +
-        s"the table's ${st.schema.fieldNames.toSeq.sorted} plus $opCol")
-    requireUpcastOnly(st,
-      batch.drop(opCol), "mergeInto")
+    val who = if (opCol.isEmpty) "upsert" else "mergeInto"
+    val cols = st.schema.fieldNames.toSeq.sorted
+    require(batch.columns.toSet == st.schema.fieldNames.toSet ++ opCol,
+      s"$who: batch columns ${batch.columns.toSeq.sorted} " + (opCol match {
+        case None => s"drift from the table's $cols"
+        case Some(o) => s"must be the table's $cols plus $o"
+      }))
+    requireUpcastOnly(st, opCol.fold(batch)(batch.drop), who)
+    val upserts = opCol.fold(lit(true))(col(_) =!= "D")
     // persist the BATCH, not just its keys: an expensive upstream
     // plan would otherwise re-evaluate for the guard aggregate, the
     // upsert count and the staging write (review-caught). The guard
-    // aggregate folds uniqueness, the NULL-op check (a null op would
-    // pass `=!= "D"` as not-an-upsert yet still tombstone its key —
-    // a silent delete) and the upsert count into ONE pass.
+    // aggregate folds uniqueness, the NULL-key check (a NULL key
+    // matches no row, so a replayed NULL-key upsert would add a
+    // duplicate instead of replacing), the NULL-op check (a null op
+    // would pass `=!= "D"` as not-an-upsert yet still tombstone its
+    // key — a silent delete) and the upsert count into ONE pass.
     val b = batch.persist()
     try {
       val g = b.agg(count(lit(1)).as("n"),
         count_distinct(col(keyCol)).as("nk"),
-        count(when(col(opCol).isNull, 1)).as("nullOps"),
-        count(when(col(opCol) =!= "D", 1)).as("nUp")).head()
+        count(when(col(keyCol).isNull, 1)).as("nullKeys"),
+        count(when(opCol.fold(lit(false))(col(_).isNull), 1))
+          .as("nullOps"),
+        count(when(upserts, 1)).as("nUp")).head()
+      require(g.getLong(3) == 0,
+        s"mergeInto: ${g.getLong(3)} batch row(s) carry a NULL " +
+          s"${opCol.getOrElse("")} — a null op would silently act as a " +
+          "delete; route every row explicitly ('D' or an upsert op)")
       require(g.getLong(2) == 0,
-        s"mergeInto: ${g.getLong(2)} batch row(s) carry a NULL $opCol — " +
-          "a null op would silently act as a delete; route every row " +
-          "explicitly ('D' or an upsert op)")
+        s"$who: ${g.getLong(2)} batch row(s) carry a NULL key " +
+          s"($keyCol) — a NULL key matches no row, so it could never " +
+          "be replaced or deleted")
       require(g.getLong(0) == g.getLong(1),
-        s"mergeInto: batch is not unique on $keyCol")
-      val nUp = g.getLong(3)
+        s"$who: batch is not unique on $keyCol")
+      val nUp = g.getLong(4)
       val v = st.version + 1
-      val keys = b.select(col(keyCol)).distinct()
       val names =
         if (nUp == 0) Seq.empty
-        else stageIn(spark, dir,
-          b.filter(col(opCol) =!= "D").select(stagedCast(st): _*), v,
-          partSpecPhys(st))
-      // stats-pruned victim locate (same skipping readWhere applies)
-      val scanFiles = locateFiles(spark, dir, st, keyCol, keys)
-      commitPauseHook(dir, v)
-      try locked(dir) {
-        checkFree(spark, dir, v)
-        // every batch key's CURRENT row dies: deletes stay dead,
-        // upserts are replaced by their staged row
-        val (deleted, tombsV, tombsUid, pfCeil) =
-          if (scanFiles.isEmpty) (0L, st.tombsV, st.tombsUid, st.pfCeil)
-          else {
-            val visible = minusTombs(spark, dir, st,
-              readFilesWithId(spark, dir, st, scanFiles))
-            val victims = visible
-              .join(broadcast(keys), Seq(keyCol), "left_semi")
-              .select(col(RPath), col(RName), col(RRow))
-            commitTombs(spark, dir, st, victims, v)
-          }
-        try writeState(spark, dir,
-          State(v, actionTag, tombsV, pfCeil, st.schema,
-            st.files ++ names, tombsUid), st.files)
-        catch { case e: CommitConflictException =>
-          retractTombs(spark, dir, st, pfCeil); throw e
-        }
-        (deleted, nUp)
-      } catch { case e: CommitConflictException =>
-        discardStaged(spark, dir, names); throw e
-      }
+        else stageIn(spark, dir, b.filter(upserts).select(stagedCast(st): _*),
+          v, partSpecPhys(st))
+      // every batch key's CURRENT row dies: deletes stay dead,
+      // upserts are replaced by their staged row
+      val t = commit(spark, dir, st, names, keyedVictims(spark, dir, st,
+          Seq(keyCol), b.select(col(keyCol)).distinct()))(t =>
+        State(v, actionTag, t.tombsV, t.pfCeil, st.schema,
+          st.files ++ names, t.uid))
+      (t.added, nUp)
     } finally b.unpersist()
   }
 
@@ -2785,7 +2725,7 @@ object MorLog {
     * Scale shape: the matched classification is one broadcast inner
     * join (O(batch) output, persisted batch-bounded) over a
     * STATS-PRUNED snapshot — only files that can hold a source key
-    * are opened ([[locateFiles]]). Inserts anti-join the batch
+    * are opened ([[locateFilesKeys]]). Inserts anti-join the batch
     * against the MATCHED KEY SET (batch-sized, broadcast — never a
     * table-key shuffle). The by-source clause inherently needs the
     * full visible snapshot (its victims are target-ONLY rows — no
@@ -2809,7 +2749,7 @@ object MorLog {
     }
     // update/insert images = the full source row (SET * / INSERT *)
     val star = st.schema.fieldNames.toSeq.map(n => n -> s"s.`$n`")
-    mergeIntoClauses(spark, dir, source, keyCol, keyCol,
+    mergeIntoClausesKeys(spark, dir, source, Seq(keyCol), Seq(keyCol),
       matched.map { case (c, a) =>
         MergeClause(Some(c), a, if (a == "update") star else Seq.empty) },
       notMatchedInsert.toSeq.map(c => MergeClause(Some(c), "insert", star)),
@@ -2869,7 +2809,7 @@ object MorLog {
     (u + i, d)
   }
 
-  /** One WHEN clause of [[mergeIntoClauses]]: `cond` is a SQL
+  /** One WHEN clause of [[mergeIntoClausesKeys]]: `cond` is a SQL
     * expression over the `s` (source) / `t` (target) aliases (None =
     * always fires), `action` ∈ update | delete | insert, and
     * `assigns` maps target column → SQL value expression — update
@@ -2916,46 +2856,30 @@ object MorLog {
         assigned(c, tk).exists(refersTo(_, "s", sk)) })
   }
 
-  /** FULL-CLAUSE MERGE over the log tier — the engine under both
-    * [[mergeIntoWhen]] (the SET-star/INSERT-star form) and SQL `MERGE INTO`
+  /** FULL-CLAUSE MERGE over the log tier — the engine under
+    * [[mergeIntoWhen]] (the SET-star/INSERT-star form), [[upsertKeys]],
+    * [[mergeIntoKeys]] and SQL `MERGE INTO`
     * ([[graft.plans.MorLogDmlStrategy]]): ordered WHEN MATCHED
     * update/delete clauses, WHEN NOT MATCHED insert clauses, WHEN NOT
     * MATCHED BY SOURCE update/delete clauses, per-column assignment
     * expressions — all landing as ONE committed version. The match
-    * key is a single target↔source column equality (`targetKey` /
-    * `sourceKey`; names may differ), and the source must be unique
-    * and non-null on it (Delta's multiple-source-match error).
+    * key is a TUPLE of target↔source column equalities, positionally
+    * paired (names may differ; a single key is the 1-tuple), and the
+    * source must be unique and non-null on it (Delta's
+    * multiple-source-match error).
     *
-    * Scale shape (unchanged from the pre-round-14 two-action form):
-    * the matched classification is one broadcast inner join (O(batch)
-    * output) over a STATS-PRUNED snapshot — only files that can hold
-    * a source key are opened ([[locateFiles]], counter-pinned);
-    * inserts anti-join the batch against the MATCHED KEY SET
-    * (batch-sized, broadcast — never a table-key shuffle); a by-source
-    * clause inherently needs the full visible snapshot (its victims
-    * are target-ONLY rows — same as Delta's NOT MATCHED BY SOURCE),
-    * served by ONE persisted pass. Returns (updated, deleted,
-    * inserted). */
-  def mergeIntoClauses(spark: SparkSession, dir: String,
-                       source: DataFrame, targetKey: String,
-                       sourceKey: String, matched: Seq[MergeClause],
-                       notMatched: Seq[MergeClause] = Seq.empty,
-                       notMatchedBySource: Seq[MergeClause] = Seq.empty,
-                       actionTag: String = "merge"): (Long, Long, Long) =
-    mergeIntoClausesKeys(spark, dir, source, Seq(targetKey),
-      Seq(sourceKey), matched, notMatched, notMatchedBySource, actionTag)
-
-  /** COMPOSITE-KEY form of [[mergeIntoClauses]] (the round-14
-    * verdict's #1 — real CDC tables routinely carry multi-column
-    * keys): the match key is a TUPLE of target↔source column
-    * equalities, positionally paired. The victim locate prunes on
-    * EVERY key column's stats ([[locateFilesKeys]] — per-column
-    * range ∧ membership, ANDed) and the classification join
-    * exact-matches the whole tuple; everything else — broadcast
-    * O(batch) classification, one committed version, OCC — is
-    * unchanged from the single-key form, which is the 1-tuple case.
-    * A merge whose clauses may write a key other than the matched one
-    * ([[clausesKeepKeys]]) commits under `rekey:<actionTag>`. */
+    * Scale shape: the matched classification is one broadcast inner
+    * join (O(batch) output) over a STATS-PRUNED snapshot — only files
+    * that can hold a source key tuple are opened ([[locateFilesKeys]]:
+    * per-column range ∧ membership, ANDed; counter-pinned), and the
+    * join exact-matches the whole tuple; inserts anti-join the batch
+    * against the MATCHED KEY SET (batch-sized, broadcast — never a
+    * table-key shuffle); a by-source clause inherently needs the full
+    * visible snapshot (its victims are target-ONLY rows — same as
+    * Delta's NOT MATCHED BY SOURCE), served by ONE persisted pass. A
+    * merge whose clauses may write a key other than the matched one
+    * ([[clausesKeepKeys]]) commits under `rekey:<actionTag>`. Returns
+    * (updated, deleted, inserted). */
   def mergeIntoClausesKeys(spark: SparkSession, dir: String,
                            source: DataFrame, targetKeys: Seq[String],
                            sourceKeys: Seq[String],
@@ -3136,37 +3060,23 @@ object MorLog {
           if (nUpdM + nIns + nUpdBs == 0) Seq.empty
           else stageIn(spark, dir, stagedParts.reduce(_ unionByName _),
             v, partSpecPhys(st))
-        commitPauseHook(dir, v)
-        try locked(dir) {
-          checkFree(spark, dir, v)
-          val tIds = (df: DataFrame) => df.select(
-            col(s"t.$RPath").as(RPath), col(s"t.$RName").as(RName),
-            col(s"t.$RRow").as(RRow))
-          val pairVictims = tIds(pairs.filter(
-            inIdx(col("_mc"), updIdx ++ delIdx)))
-          val victims = bySrc match {
-            case None => pairVictims
-            case Some(bs) => pairVictims.unionByName(
-              tIds(bs.filter(inIdx(col("_bc"), bsUpdIdx ++ bsDelIdx))))
-          }
-          val (added, tombsV, tombsUid, pfCeil) =
-            if (nUpdM + nMDel == 0 && notMatchedBySource.isEmpty)
-              (0L, st.tombsV, st.tombsUid, st.pfCeil)
-            else commitTombs(spark, dir, st, victims, v)
-          val tag =
-            if (clausesKeepKeys(spark, targetKeys, sourceKeys, matched,
-                notMatched, notMatchedBySource)) actionTag
-            else s"rekey:$actionTag"
-          try writeState(spark, dir,
-            State(v, tag, tombsV, pfCeil, st.schema,
-              st.files ++ names, tombsUid), st.files)
-          catch { case e: CommitConflictException =>
-            retractTombs(spark, dir, st, pfCeil); throw e
-          }
-          (nUpdM + nUpdBs, added - nUpdM - nUpdBs, nIns)
-        } catch { case e: CommitConflictException =>
-          discardStaged(spark, dir, names); throw e
-        }
+        val tIds = (df: DataFrame) => df.select(
+          col(s"t.$RPath").as(RPath), col(s"t.$RName").as(RName),
+          col(s"t.$RRow").as(RRow))
+        val pairVictims = tIds(pairs.filter(
+          inIdx(col("_mc"), updIdx ++ delIdx)))
+        val victims =
+          if (nUpdM + nMDel == 0 && notMatchedBySource.isEmpty) None
+          else Some(bySrc.fold(pairVictims)(bs => pairVictims.unionByName(
+            tIds(bs.filter(inIdx(col("_bc"), bsUpdIdx ++ bsDelIdx))))))
+        val tag =
+          if (clausesKeepKeys(spark, targetKeys, sourceKeys, matched,
+              notMatched, notMatchedBySource)) actionTag
+          else s"rekey:$actionTag"
+        val t = commit(spark, dir, st, names, victims)(t =>
+          State(v, tag, t.tombsV, t.pfCeil, st.schema, st.files ++ names,
+            t.uid))
+        (nUpdM + nUpdBs, t.added - nUpdM - nUpdBs, nIns)
       } finally {
         pairs.unpersist()
         if (notMatchedBySource.nonEmpty) vis.unpersist()
@@ -3544,10 +3454,8 @@ object MorLog {
       require(missing.isEmpty,
         s"restore: version $v references ${missing.length} vacuumed file(s)")
       val cur = currentState(spark, dir)
-      commitPauseHook(dir, cur.version + 1)
-      writeState(spark, dir,
-        State(cur.version + 1, s"restore:v$v", st.tombsV, st.pfCeil,
-          st.schema, st.files, st.tombsUid), cur.files)
+      commit(spark, dir, cur)(_ => State(cur.version + 1, s"restore:v$v",
+        st.tombsV, st.pfCeil, st.schema, st.files, st.tombsUid))
     }
 
   /** The tombstones ADDED between two consecutive states when `st` is
@@ -3868,12 +3776,13 @@ object MorLog {
         n
       }
       current = names.map(n => s"$dir/$n")
-      if (mergeKeys.isEmpty) {
-        commitPauseHook(dir, v)
-        writeState(spark, dir,
-          State(v, tag, st.tombsV, st.pfCeil, st.schema,
-            st.files ++ names, st.tombsUid), st.files)
-      } else {
+      // staged files are NOT discarded on a conflict: the retry
+      // re-renames them under its own version
+      def land(victims: Option[DataFrame]): Unit =
+        commit(spark, dir, st, victims = victims)(t => State(v, tag,
+          t.tombsV, t.pfCeil, st.schema, st.files ++ names, t.uid))
+      if (mergeKeys.isEmpty) land(None)
+      else {
         val physKs = mergeKeys.map(k =>
           k -> st.schema.fields.find(_.name == k).map(physOf)
             .getOrElse(throw new IllegalArgumentException(
@@ -3941,33 +3850,11 @@ object MorLog {
               java.util.Arrays.asList(sample: _*),
               keysDistributed.schema), false)
           else (keysDistributed.persist(), true)
-        try {
-          val scanFiles = labeled(spark, "morlog:locate") {
-            locateFilesKeys(spark, dir, st,
-              mergeKeys.map(k => k -> k), keys)
-          }
-          commitPauseHook(dir, v)
-          locked(dir) {
-            checkFree(spark, dir, v)
-            val (_, tombsV, tombsUid, pfCeil) =
-              if (scanFiles.isEmpty)
-                (0L, st.tombsV, st.tombsUid, st.pfCeil)
-              else labeled(spark, "morlog:tombs") {
-                val visible = minusTombs(spark, dir, st,
-                  readFilesWithId(spark, dir, st, scanFiles))
-                val victims = visible
-                  .join(broadcast(keys), mergeKeys, "left_semi")
-                  .select(col(RPath), col(RName), col(RRow))
-                commitTombs(spark, dir, st, victims, v)
-              }
-            try writeState(spark, dir,
-              State(v, tag, tombsV, pfCeil, st.schema,
-                st.files ++ names, tombsUid), st.files)
-            catch { case e: CommitConflictException =>
-              retractTombs(spark, dir, st, pfCeil); throw e
-            }
-          }
-        } finally if (persisted) keysDistributed.unpersist()
+        // the victim plan's file listing counts as tombstone work
+        try land(labeled(spark, "morlog:tombs") {
+          keyedVictims(spark, dir, st, mergeKeys, keys)
+        })
+        finally if (persisted) keysDistributed.unpersist()
       }
     }
     dropAll(delNetted)

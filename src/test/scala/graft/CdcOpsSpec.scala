@@ -5,20 +5,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The specs' session: the shipped config ([[GraftSession.builder]])
+  * on 4 worker threads, plus a throwaway warehouse dir. */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse-").toString)
-    // mirror GraftSession: standard INT64-micros timestamps (footer
-    // stats + the DSv2 reader's standard decode; INT96 has neither)
-    .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    // the engine's SQL surface (native functions, range-join rewrite,
-    // the MorLog DML strategy) — what GraftSession installs
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
 

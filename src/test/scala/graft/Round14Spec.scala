@@ -293,9 +293,22 @@ class Round14Spec extends AnyFunSuite {
   }
 
   test("an OCC loser retracts its per-file tombstone marker: committedGen never drifts above the meta ceiling") {
-    val dir = s"${tmp("r14_retract")}/t"
+    // every victim-carrying op races through the ONE commit step, so
+    // each must retract its lost marker: (name, op, its effect on key
+    // 10 — None = deleted)
+    val ops: Seq[(String, String => Unit, Option[Long])] = Seq(
+      ("deleteWhere", d => MorLog.deleteWhere(spark, d, col("k") === 10L),
+        None),
+      ("mergeInto", d => MorLog.mergeInto(spark, d,
+        Seq((10L, 0L, "D"), (12L, 999L, "U")).toDF("k", "v", "op"), "k",
+        "op"), None),
+      ("updateWhere", d => MorLog.updateWhere(spark, d, col("k") === 10L,
+        Seq("v" -> lit(-10L))), Some(-10L)),
+      ("upsert", d => MorLog.upsert(spark, d,
+        Seq((10L, 1010L)).toDF("k", "v"), "k"), Some(1010L)))
     spark.conf.set(graft.sink.DeletionVectors.GuardConfKey, "1")
-    try {
+    try ops.foreach { case (name, op, at10) =>
+      val dir = s"${tmp(s"r14_retract_$name")}/t"
       MorLog.create(spark.range(0, 40)
         .select(col("id").as("k"), col("id").as("v"))
         .repartition(2), dir)
@@ -315,27 +328,28 @@ class Round14Spec extends AnyFunSuite {
         if (d == dir && fired.compareAndSet(false, true)) {
           rival.start(); rival.join()
         }
-      try MorLog.deleteWhere(spark, dir, col("k") === 10L)
+      try op(dir)
       finally MorLog.tombsCommittedHook = (_, _) => ()
       assert(fired.get && MorLogStats.lastCommitRetries == 1,
-        "the race must fire")
+        s"$name: the race must fire")
       val gNow = DvPerFile.committedGen(spark, dir).get
       val ceil = MorLog.versions(spark, dir)
         .map(v => MorLog.state(spark, dir, v).pfCeil).max
       assert(gNow == ceil,
-        s"committedGen ($gNow) must equal the committed meta ceiling " +
-          s"($ceil) — a retracted loser may not linger")
+        s"$name: committedGen ($gNow) must equal the committed meta " +
+          s"ceiling ($ceil) — a retracted loser may not linger")
       // the loser's orphan gen (g0+1, claimed by the lost attempt)
       // has no marker; its claim file blocks re-use, so the retry
       // committed at a higher gen
-      assert(ceil > g0 + 1, "the retry must claim past the lost gen")
+      assert(ceil > g0 + 1, s"$name: the retry must claim past the lost gen")
       assert((g0 + 1 until ceil).forall(g =>
         !Files.exists(java.nio.file.Paths.get(
           DvPerFile.pfDir(dir), s"_commit.g$g"))),
-        "the lost attempt's marker must be gone")
+        s"$name: the lost attempt's marker must be gone")
       // and the data is right
       val got = MorLog.read(spark, dir).as[(Long, Long)].collect().toMap
-      assert(!got.contains(10L) && got.contains(500L) && got(20L) == 20L)
+      assert(got.get(10L) == at10 && got.contains(500L) &&
+        got(20L) == 20L, s"$name: $got")
     } finally spark.conf.unset(graft.sink.DeletionVectors.GuardConfKey)
   }
 
