@@ -3728,20 +3728,23 @@ object MorLog {
     * no-op — no fence needed).
     *
     * With `netBy` (an ORDER column list the sink also stamps on its
-    * delete-key files), duplicate keys inside an epoch LAST-WINS-NET
-    * before the commit: per key the lexicographically-highest tuple
-    * decides (data beats delete on an exact tie — the change feed's
-    * delete-then-insert upsert pair within one version), so arbitrary
-    * multi-version feeds sink without `maxVersionsPerTrigger = 1`.
-    * The LIST form (round-15 verdict's #6) exists because real change
-    * feeds tie on second-precision order columns — `netBy =
-    * "ts,_seq"` breaks those ties on the finer ordinal; only an
-    * equal-FULL-TUPLE data tie still refuses loud (an arbitrary
-    * winner would be data-dependent nondeterminism). Netting that
-    * actually drops rows costs ONE epoch-bounded rewrite of the
-    * affected side's staged files; an already-unique epoch is
-    * detected with metadata-cheap aggregates and keeps the zero-copy
-    * rename path. */
+    * delete-key files), duplicate keys inside an epoch LAST-WINS-NET:
+    * per key the lexicographically-highest tuple decides (data beats
+    * delete on an exact tie — the change feed's delete-then-insert
+    * upsert pair within one version), so arbitrary multi-version
+    * feeds sink without `maxVersionsPerTrigger = 1`. The LIST form
+    * exists because real change feeds tie on second-precision order
+    * columns — `netBy = "ts,_seq"` breaks those ties on the finer
+    * ordinal; only an equal-FULL-TUPLE data tie refuses loud (an
+    * arbitrary winner would be data-dependent nondeterminism). The
+    * netting happens BEFORE this commit, in the sink's writers
+    * ([[graft.sources.MorLogEpochWriter]]), whose input the write
+    * requires clustered by key and sorted by key, then order tuple
+    * descending: each task writes only its keys' winners (a NULL key
+    * or order column fails the epoch there). So a netted epoch
+    * arrives per-key-unique on each side with the sides disjoint,
+    * and this commit skips the uniqueness check and renames the
+    * files as they are. */
   private[graft] def commitStreamEpoch(spark: SparkSession, dir: String,
                                        dataStaged: Seq[String],
                                        deleteStaged: Seq[String],
@@ -3750,21 +3753,17 @@ object MorLog {
                                        netBy: Seq[String] = Seq.empty)
       : Unit = {
     val fs = fsOf(spark, dir)
-    def dropAll(ps: Seq[String]): Unit = dropAll2(fs, ps)
+    def dropAll(ps: Seq[String]): Unit =
+      ps.foreach(p => scala.util.Try(fs.delete(new Path(p), false)))
     if (dataStaged.isEmpty && deleteStaged.isEmpty) return
     if (appliedTags(spark, dir).contains(tag)) {
       dropAll(dataStaged ++ deleteStaged); return
     }
     require(mergeKeys.nonEmpty || deleteStaged.isEmpty,
       "delete-tagged rows need mergeKey")
-    val (dataNetted, delNetted, netDirs) =
-      if (netBy.nonEmpty) labeled(spark, "morlog:net") {
-        netEpoch(spark, dir, dataStaged, deleteStaged, mergeKeys, netBy)
-      }
-      else (dataStaged, deleteStaged, Seq.empty[String])
     // staged files re-rename per OCC attempt (the name carries the
     // version); `current` tracks their present location
-    var current: Seq[String] = dataNetted
+    var current: Seq[String] = dataStaged
     withOcc(spark, dir) {
       val st = currentState(spark, dir)
       val v = st.version + 1
@@ -3793,16 +3792,18 @@ object MorLog {
           if (names.isEmpty) None
           else Some(logical(spark.read.schema(physSchema(st))
             .parquet(current: _*)))
+        // the delete-key files' schema is known (key columns, then the
+        // netBy columns): passing it spares a schema-inference job
         val delKeys =
-          if (delNetted.isEmpty) None
-          else Some(logical(spark.read.parquet(delNetted: _*)))
+          if (deleteStaged.isEmpty) None
+          else Some(logical(spark.read.schema(StructType(
+            (mergeKeys ++ netBy).map(st.schema(_))
+              .map(f => f.copy(name = physOf(f)))))
+            .parquet(deleteStaged: _*)))
         val anyNull = mergeKeys.map(col(_).isNull).reduce(_ || _)
         // per-side uniqueness; the union may overlap (upsert pair).
-        // SKIPPED for netted epochs (r17): netEpoch just PRODUCED
-        // per-key-unique sides (its sideAgg counted n vs nk and its
-        // rewrite keeps row 1 per key) and checked NULL keys itself —
-        // re-aggregating both sides here was two redundant jobs per
-        // epoch re-proving what the netting pass established.
+        // SKIPPED for netted epochs: the writers kept one row per key
+        // (their input is clustered by key) and refused NULL keys.
         // ONE grouped job for BOTH sides (r18): the upsert-pair epoch
         // paid two separate aggregate jobs over the same tiny staged
         // files for a per-side check a `_side` tag expresses in one.
@@ -3857,139 +3858,11 @@ object MorLog {
         finally if (persisted) keysDistributed.unpersist()
       }
     }
-    dropAll(delNetted)
-    netDirs.foreach(d =>
-      scala.util.Try(fs.delete(new Path(d), true)))
+    dropAll(deleteStaged)
   }
 
-  /** LAST-WINS-NET one epoch's staged files on the `ordCols` tuple
-    * (see [[commitStreamEpoch]]'s netBy contract — lexicographic
-    * order over the list, so a coarse timestamp + a fine sequence
-    * column net real feeds without ties). Returns the (possibly
-    * rewritten) data and delete staged file lists plus any netting
-    * staging dirs to sweep after the commit. The decision aggregates
-    * are metadata-cheap (counts over the epoch); a rewrite reads and
-    * writes only the affected side's epoch files — never table data. */
-  private def netEpoch(spark: SparkSession, dir: String,
-                       dataStaged: Seq[String], deleteStaged: Seq[String],
-                       ks: Seq[String], ordCols: Seq[String])
-      : (Seq[String], Seq[String], Seq[String]) = {
-    import org.apache.spark.sql.expressions.Window
-    val fs = fsOf(spark, dir)
-    val st = currentState(spark, dir)
-    def physOfName(n: String, what: String): String =
-      st.schema.fields.find(_.name == n).map(physOf)
-        .getOrElse(throw new IllegalArgumentException(
-          s"$what $n is not in the schema"))
-    val physKs = ks.map(physOfName(_, "mergeKey"))
-    val physOs = ordCols.map(physOfName(_, "netBy"))
-    val kCols = physKs.map(col)
-    // the order TUPLE as one struct: struct comparison IS
-    // lexicographic comparison, and max() over it is the per-key
-    // last-writer — one aggregate whatever the list length
-    def ordStruct: Column = struct(physOs.map(col): _*)
-    val data = if (dataStaged.isEmpty) None
-      else Some(spark.read.schema(physSchema(st)).parquet(dataStaged: _*))
-    val dels = if (deleteStaged.isEmpty) None
-      else Some(spark.read.parquet(deleteStaged: _*))
-    def sideAgg(df: DataFrame, side: String): (Long, Long) = {
-      val anyNullOrd = physOs.map(col(_).isNull).reduce(_ || _)
-      val anyNullKey = kCols.map(_.isNull).reduce(_ || _)
-      val r = df.agg(count(lit(1)).as("n"),
-        count_distinct(kCols.head, kCols.tail: _*).as("nk"),
-        count(when(anyNullOrd, 1)).as("no"),
-        // null-KEY refusal lives here for netted epochs (r17): the
-        // post-net uniqueness re-check was dropped as redundant, and
-        // this same aggregate carries its null-key guard for free
-        count(when(anyNullKey, 1)).as("nks")).head()
-      require(r.getLong(3) == 0,
-        s"stream epoch: NULL key column " +
-          s"(${ks.mkString(", ")}) in $side rows")
-      require(r.getLong(2) == 0,
-        s"stream epoch netBy: NULL ${ordCols.mkString(", ")} in $side " +
-          "rows — every order column must be total on every routed row")
-      (r.getLong(0), r.getLong(1))
-    }
-    val (nData, nDataKeys) = data.map(sideAgg(_, "data")).getOrElse((0L, 0L))
-    val (nDel, nDelKeys) = dels.map(sideAgg(_, "delete")).getOrElse((0L, 0L))
-    val delMax = dels.map(_.groupBy(kCols: _*)
-      .agg(max(ordStruct).as("_net_dord")))
-    // delete-beats-data losses (only possible when both sides land)
-    val lossCnt = (data, delMax) match {
-      case (Some(d), Some(m)) => d.select((kCols :+
-          ordStruct.as("_net_ord")): _*)
-        .join(m, physKs)
-        .filter(col("_net_dord") > col("_net_ord")).count()
-      case _ => 0L
-    }
-    if (nData == nDataKeys && nDel == nDelKeys && lossCnt == 0L)
-      return (dataStaged, deleteStaged, Seq.empty) // zero-copy path
-    val uid = newUid()
-    val dirs = Seq.newBuilder[String]
-    val dataOut = if (nData == nDataKeys && lossCnt == 0L) dataStaged
-      else {
-        val d = data.get
-        val byK = Window.partitionBy(kCols: _*)
-          .orderBy(physOs.map(col(_).desc): _*)
-        val top = d
-          .withColumn("_net_rn", row_number().over(byK))
-          .withColumn("_net_tie", count(lit(1))
-            .over(Window.partitionBy(
-              (kCols ++ physOs.map(col)): _*)))
-          .filter(col("_net_rn") === 1).persist()
-        try {
-          require(top.filter(col("_net_tie") > 1).isEmpty,
-            s"stream epoch netBy: data rows tie on " +
-              s"((${ks.mkString(", ")}), (${ordCols.mkString(", ")})) " +
-              "— an arbitrary winner would be nondeterministic; netBy " +
-              "accepts a comma-separated tiebreak list (e.g. " +
-              "netBy=ts,_seq) — append a finer ordinal")
-          val survivors = delMax match {
-            case None => top
-            case Some(m) => top.join(m, physKs, "left")
-              .filter(col("_net_dord").isNull ||
-                ordStruct >= col("_net_dord"))
-          }
-          val out = s"$dir/$LogDir/sstage_netd_$uid"
-          dirs += out
-          val img = survivors.select(
-            physSchema(st).fieldNames.map(col): _*)
-          val parts = partSpecPhys(st)
-          if (parts.isEmpty) img.write.parquet(out)
-          else {
-            // partitioned table: the rewrite must keep the
-            // one-tuple-per-file alignment the sink's own writers
-            // produce — same duplicated-helper-column dynamic write
-            // as [[stageIn]] (the helper becomes the dir name and is
-            // stripped from the file; real columns stay in it)
-            val dup = parts.map { case (c, tf) =>
-              partExpr(col(c), tf).as(s"__gp_$c") }
-            img.select(col("*") +: dup: _*).write
-              .partitionBy(parts.map("__gp_" + _._1): _*).parquet(out)
-          }
-          dropAll2(fs, dataStaged)
-          listStaged(fs, out)
-        } finally top.unpersist()
-      }
-    val delOut = if (nDel == nDelKeys) deleteStaged
-      else {
-        val out = s"$dir/$LogDir/sstage_netk_$uid"
-        dirs += out
-        delMax.get.select((kCols ++ physOs.map(p =>
-            col("_net_dord").getField(p).as(p))): _*)
-          .write.parquet(out)
-        dropAll2(fs, deleteStaged)
-        listStaged(fs, out)
-      }
-    (dataOut, delOut, dirs.result())
-  }
-
-  private def dropAll2(fs: org.apache.hadoop.fs.FileSystem,
-                       ps: Seq[String]): Unit =
-    ps.foreach(p => scala.util.Try(fs.delete(new Path(p), false)))
-
-  /** Leaf parquet files under a netting staging dir — recursive, the
-    * partitioned rewrite nests them in helper-column dirs. */
+  /** Leaf parquet files under a staging dir — recursive, a
+    * partitioned write nests them in helper-column dirs. */
   private def listStaged(fs: org.apache.hadoop.fs.FileSystem,
                          d: String): Seq[String] =
     fs.listStatus(new Path(d)).toSeq.flatMap { s =>

@@ -447,118 +447,160 @@ class MorLogWriteBuilder(path: String, partitionBy: Seq[String],
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     overwrite = true; this
   }
-  override def build(): org.apache.spark.sql.connector.write.Write =
-    new org.apache.spark.sql.connector.write.V1Write {
-      override def toInsertableRelation()
-          : org.apache.spark.sql.sources.InsertableRelation =
-        (data: org.apache.spark.sql.DataFrame, ow: Boolean) => {
-          val spark = data.sparkSession
-          if (MorLog.versions(spark, path).isEmpty)
-            MorLog.create(data, path, partitionBy)
-          else if (overwrite || ow) MorLog.overwrite(spark, path, data)
-          else MorLog.append(spark, path, data)
-        }
+  /** A comma-separated list option; `Some(empty)` when the option is
+    * present but names nothing. Comma-separated `mergeKey` = a
+    * COMPOSITE key (the tuple forms of the locate/netting — same
+    * semantics as multi-equality MERGE ON); comma-separated `netBy` =
+    * a lexicographic order tuple. */
+  private def listOpt(name: String): Option[Seq[String]] =
+    Option(info.options.get(name)).map(_.split(",").map(_.trim)
+      .filter(_.nonEmpty).toSeq)
 
-      /** STREAMING sink (`df.writeStream.format(...)`): resolve the
-        * table's schema/physical mapping/partition spec ONCE at query
-        * start, validate the stream frame against it loudly, and hand
-        * executors a [[MorLogStreamingWrite]] — see that class for the
-        * epoch protocol. Options: `mergeKey` (keyed upsert apply;
-        * absent = plain append epochs), `opCol` + `deleteValue`
-        * (default "D") route delete-tagged rows. */
-      override def toStreaming
-          : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-        val spark = org.apache.spark.sql.SparkSession.active
-        require(MorLog.versions(spark, path).nonEmpty,
-          "streaming write needs an existing table — create it first " +
-            "(the schema and partition spec are the table's contract)")
-        val (cols, parts) = MorLog.connectorSinkPlan(spark, path)
-        val opts = info.options
-        // comma-separated = a COMPOSITE key (the tuple forms of the
-        // locate/netting — same semantics as multi-equality MERGE ON)
-        val mergeKeyOpt = Option(opts.get("mergeKey"))
-        val mergeKeys = mergeKeyOpt.toSeq
-          .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-        // a present-but-empty option must not silently select APPEND
-        // mode (review-caught: a typo'd "" duplicated every epoch)
-        require(mergeKeyOpt.isEmpty || mergeKeys.nonEmpty,
-          "mergeKey: the option is present but names no column")
-        require(mergeKeys.distinct.size == mergeKeys.size,
-          s"mergeKey: duplicate column in $mergeKeys")
-        val opCol = Option(opts.get("opCol"))
-        val deleteValue = Option(opts.get("deleteValue")).getOrElse("D")
-        require(opCol.isEmpty || mergeKeys.nonEmpty,
-          "opCol routing needs mergeKey (deletes are keyed)")
-        // optional in-epoch netting: without it an epoch must be
-        // key-unique per side (one source version per epoch); with it
-        // duplicate keys last-wins-net on this ORDER column LIST
-        // (comma-separated, lexicographic — the tail entries break
-        // coarse-timestamp ties), so arbitrary multi-version feeds
-        // can sink uncapped
-        val netByOpt = Option(opts.get("netBy"))
-        val netBys = netByOpt.toSeq
-          .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-        require(netByOpt.isEmpty || netBys.nonEmpty,
-          "netBy: the option is present but names no column")
-        require(netBys.distinct.size == netBys.size,
-          s"netBy: duplicate column in $netBys")
-        require(netBys.isEmpty || mergeKeys.nonEmpty,
-          "netBy needs mergeKey (netting is per key)")
-        // precedence: writer option > durable TABLE property >
-        // session conf > default (table knobs travel with the table)
-        val maxOpenWriters =
-          Option(opts.get("maxOpenWriters")).map(_.trim.toInt)
-            .orElse(MorLog.tableProp(spark, path,
-              "graft.sink.maxOpenWriters").map(_.trim.toInt))
-            .getOrElse(32)
-        require(maxOpenWriters >= 1,
-          "maxOpenWriters must be >= 1")
-        val in = info.schema
-        val expected = cols.map(_._1).toSet ++ opCol.toSet
-        require(in.fieldNames.toSet == expected,
-          s"stream columns ${in.fieldNames.sorted.mkString(", ")} must " +
-            s"be the table's ${cols.map(_._1).sorted.mkString(", ")}" +
-            opCol.map(c => s" plus $c").getOrElse(""))
-        cols.foreach { case (n, dt, _) =>
-          require(in(n).dataType == dt,
-            s"stream column $n: ${in(n).dataType.simpleString} must " +
-              s"equal the table's ${dt.simpleString} (the sink casts " +
-              "nothing — align the frame)")
-          require(GroupEncode.supported(dt),
-            s"streaming sink cannot encode $n: ${dt.simpleString}")
-        }
-        opCol.foreach(c => require(in(c).dataType == StringType,
-          s"opCol $c must be STRING"))
-        mergeKeys.foreach(k => require(cols.exists(_._1 == k),
-          s"mergeKey $k is not a table column"))
-        netBys.foreach(c => require(cols.exists(_._1 == c),
-          s"netBy $c is not a table column"))
-        netBys.foreach(c => require(!mergeKeys.contains(c),
-          s"netBy $c must differ from mergeKey (ordering within a key)"))
-        val dataNames = cols.map(_._1).toArray
-        val dataTypes = cols.map(_._2).toArray
-        val physNames = cols.map(_._3).toArray
-        val dataOrdinals = dataNames.map(in.fieldIndex)
-        val partIdx = parts.map { case (n, tf) =>
-          (dataNames.indexOf(n), tf) }
-        new MorLogStreamingWrite(path, info.queryId, dataNames,
-          dataTypes, physNames, dataOrdinals, partIdx,
-          opCol.map(in.fieldIndex).getOrElse(-1), deleteValue,
-          mergeKeys,
-          mergeKeys.map(k => physNames(dataNames.indexOf(k))).toArray,
-          mergeKeys.map(k => dataTypes(dataNames.indexOf(k))).toArray,
-          new DvPerFile.SerConf(spark.sparkContext.hadoopConfiguration),
-          // session zone: the sink's partition derivation must group
-          // by the same boundaries as the batch path's session-zone
-          // SQL transforms (review-caught)
-          spark.conf.get("spark.sql.session.timeZone"),
-          netBys,
-          netBys.map(c => physNames(dataNames.indexOf(c))).toArray,
-          netBys.map(in.fieldIndex).toArray,
-          netBys.map(c => dataTypes(dataNames.indexOf(c))).toArray,
-          maxOpenWriters)
-      }
+  /** A netted sink write (`mergeKey` + `netBy`) also declares the
+    * input its writers net in one pass ([[MorLogEpochWriter]]): every
+    * row of a key in ONE task, sorted by key ascending, then by the
+    * order tuple descending. Strictly required: a non-strict
+    * distribution plans a `RebalancePartitions`, whose AQE skew split
+    * (`OptimizeSkewInRebalancePartitions`) may cut one key's rows
+    * across two tasks; the strict form plans a `RepartitionByExpression`
+    * that AQE still coalesces (a 2k-row epoch runs as one task).
+    * `requiredNumPartitions = 0` leaves the count to the session. */
+  override def build(): org.apache.spark.sql.connector.write.Write = {
+    import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+    import org.apache.spark.sql.connector.expressions.{Expression, Expressions, NamedReference, SortDirection, SortOrder}
+    val keys = listOpt("mergeKey").getOrElse(Nil)
+    val netBys = listOpt("netBy").getOrElse(Nil)
+    // quoted: a column name is one identifier, dots included
+    def ref(c: String): NamedReference =
+      Expressions.column("`" + c.replace("`", "``") + "`")
+    if (keys.isEmpty || netBys.isEmpty) new MorLogWrite
+    else new MorLogWrite
+        with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+      override def requiredDistribution(): Distribution =
+        Distributions.clustered(keys.map(ref(_): Expression).toArray)
+      override def distributionStrictlyRequired(): Boolean = true
+      override def requiredNumPartitions(): Int = 0
+      override def requiredOrdering(): Array[SortOrder] =
+        (keys.map(k => Expressions.sort(ref(k), SortDirection.ASCENDING)) ++
+          netBys.map(c => Expressions.sort(ref(c), SortDirection.DESCENDING)))
+          .toArray
     }
+  }
+
+  private class MorLogWrite
+      extends org.apache.spark.sql.connector.write.V1Write {
+    override def toInsertableRelation()
+        : org.apache.spark.sql.sources.InsertableRelation =
+      (data: org.apache.spark.sql.DataFrame, ow: Boolean) => {
+        val spark = data.sparkSession
+        if (MorLog.versions(spark, path).isEmpty)
+          MorLog.create(data, path, partitionBy)
+        else if (overwrite || ow) MorLog.overwrite(spark, path, data)
+        else MorLog.append(spark, path, data)
+      }
+
+    /** STREAMING sink (`df.writeStream.format(...)`): resolve the
+      * table's schema/physical mapping/partition spec ONCE at query
+      * start, validate the stream frame against it loudly, and hand
+      * executors a [[MorLogStreamingWrite]] — see that class for the
+      * epoch protocol. Options: `mergeKey` (keyed upsert apply;
+      * absent = plain append epochs), `opCol` + `deleteValue`
+      * (default "D") route delete-tagged rows. */
+    override def toStreaming
+        : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
+      val spark = org.apache.spark.sql.SparkSession.active
+      require(MorLog.versions(spark, path).nonEmpty,
+        "streaming write needs an existing table — create it first " +
+          "(the schema and partition spec are the table's contract)")
+      val (cols, parts) = MorLog.connectorSinkPlan(spark, path)
+      val opts = info.options
+      val mergeKeyOpt = listOpt("mergeKey")
+      val mergeKeys = mergeKeyOpt.getOrElse(Nil)
+      // a present-but-empty option must not silently select APPEND
+      // mode (review-caught: a typo'd "" duplicated every epoch)
+      require(mergeKeyOpt.isEmpty || mergeKeys.nonEmpty,
+        "mergeKey: the option is present but names no column")
+      require(mergeKeys.distinct.size == mergeKeys.size,
+        s"mergeKey: duplicate column in $mergeKeys")
+      val opCol = Option(opts.get("opCol"))
+      val deleteValue = Option(opts.get("deleteValue")).getOrElse("D")
+      require(opCol.isEmpty || mergeKeys.nonEmpty,
+        "opCol routing needs mergeKey (deletes are keyed)")
+      // optional in-epoch netting: without it an epoch must be
+      // key-unique per side (one source version per epoch); with it
+      // duplicate keys last-wins-net in the writers on this ORDER
+      // column LIST (lexicographic — the tail entries break
+      // coarse-timestamp ties), so arbitrary multi-version feeds
+      // can sink uncapped
+      val netByOpt = listOpt("netBy")
+      val netBys = netByOpt.getOrElse(Nil)
+      require(netByOpt.isEmpty || netBys.nonEmpty,
+        "netBy: the option is present but names no column")
+      require(netBys.distinct.size == netBys.size,
+        s"netBy: duplicate column in $netBys")
+      require(netBys.isEmpty || mergeKeys.nonEmpty,
+        "netBy needs mergeKey (netting is per key)")
+      // precedence: writer option > durable TABLE property >
+      // session conf > default (table knobs travel with the table)
+      val maxOpenWriters =
+        Option(opts.get("maxOpenWriters")).map(_.trim.toInt)
+          .orElse(MorLog.tableProp(spark, path,
+            "graft.sink.maxOpenWriters").map(_.trim.toInt))
+          .getOrElse(32)
+      require(maxOpenWriters >= 1,
+        "maxOpenWriters must be >= 1")
+      val in = info.schema
+      val expected = cols.map(_._1).toSet ++ opCol.toSet
+      require(in.fieldNames.toSet == expected,
+        s"stream columns ${in.fieldNames.sorted.mkString(", ")} must " +
+          s"be the table's ${cols.map(_._1).sorted.mkString(", ")}" +
+          opCol.map(c => s" plus $c").getOrElse(""))
+      cols.foreach { case (n, dt, _) =>
+        require(in(n).dataType == dt,
+          s"stream column $n: ${in(n).dataType.simpleString} must " +
+            s"equal the table's ${dt.simpleString} (the sink casts " +
+            "nothing — align the frame)")
+        require(GroupEncode.supported(dt),
+          s"streaming sink cannot encode $n: ${dt.simpleString}")
+      }
+      opCol.foreach(c => require(in(c).dataType == StringType,
+        s"opCol $c must be STRING"))
+      mergeKeys.foreach(k => require(cols.exists(_._1 == k),
+        s"mergeKey $k is not a table column"))
+      netBys.foreach(c => require(cols.exists(_._1 == c),
+        s"netBy $c is not a table column"))
+      netBys.foreach(c => require(!mergeKeys.contains(c),
+        s"netBy $c must differ from mergeKey (ordering within a key)"))
+      val dataNames = cols.map(_._1).toArray
+      val dataTypes = cols.map(_._2).toArray
+      val physNames = cols.map(_._3).toArray
+      val dataOrdinals = dataNames.map(in.fieldIndex)
+      val partIdx = parts.map { case (n, tf) =>
+        (dataNames.indexOf(n), tf) }
+      new MorLogStreamingWrite(path, info.queryId, dataNames,
+        dataTypes, physNames, dataOrdinals, partIdx,
+        opCol.map(in.fieldIndex).getOrElse(-1), deleteValue,
+        mergeKeys,
+        mergeKeys.map(k => physNames(dataNames.indexOf(k))).toArray,
+        mergeKeys.map(k => dataTypes(dataNames.indexOf(k))).toArray,
+        new DvPerFile.SerConf(spark.sparkContext.hadoopConfiguration),
+        // session zone: the sink's partition derivation must group
+        // by the same boundaries as the batch path's session-zone
+        // SQL transforms (review-caught)
+        spark.conf.get("spark.sql.session.timeZone"),
+        netBys,
+        netBys.map(c => physNames(dataNames.indexOf(c))).toArray,
+        netBys.map(in.fieldIndex).toArray,
+        netBys.map(c => dataTypes(dataNames.indexOf(c))).toArray,
+        maxOpenWriters,
+        // the sink's files land in the table as written: compress
+        // them as Spark's own writes would
+        org.apache.spark.sql.execution.datasources.parquet
+          .ParquetCompressionCodec.fromString(
+            spark.conf.get("spark.sql.parquet.compression.codec"))
+          .getCompressionCodec)
+    }
+  }
 }
 
 class MorLogScanBuilder(path: String, version: Option[Int],

@@ -6,12 +6,15 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sink.{DvPerFile, MorLog}
 
@@ -51,14 +54,20 @@ import graft.sink.{DvPerFile, MorLog}
   * delete keys must be unique; a key in BOTH is the upsert pair the
   * change feed emits (delete precedes insert within a version) — the
   * data row wins. Subscribing with `maxVersionsPerTrigger = 1` keeps
-  * each epoch a single source version, which makes this netting exact
-  * for any lifecycle. Alternatively `.option("netBy",
+  * each epoch a single source version, which makes this exact for any
+  * lifecycle. Alternatively `.option("netBy",
   * "<orderCol>[,<tiebreak>…]")` last-wins-nets duplicate keys INSIDE
-  * an epoch on that order column LIST (lexicographic; the sink stamps
-  * every listed column on delete-key files too), so uncapped
+  * an epoch on that order column LIST (lexicographic), so uncapped
   * multi-version feeds sink exactly, and second-precision feeds break
-  * their timestamp ties on the finer tail ordinal — see
-  * [[graft.sink.MorLog.commitStreamEpoch]]'s netBy contract.
+  * their timestamp ties on the finer tail ordinal. The netting runs IN
+  * THE WRITERS: a netted write requires its input clustered by the
+  * merge key and sorted by key, then order tuple descending
+  * ([[MorLogWriteBuilder]]), so each task sees every row of a key
+  * together and [[MorLogEpochWriter]] keeps only the key's winner in
+  * one streaming pass — data beats delete on an exact tie, a delete
+  * lands as a key-only row stamped with its order tuple. The epoch
+  * commit then finds per-key-unique, disjoint sides and renames them
+  * as they are.
   * `.option("maxOpenWriters", n)` (or `graft.sink.maxOpenWriters`,
   * default 32) bounds each task's concurrently open parquet writers —
   * past it the least-recently-written partition tuple's file seals
@@ -146,10 +155,14 @@ private[sources] object GroupEncode {
     }
   }
 
-  def open(conf: Configuration, p: Path,
-           schema: MessageType): ParquetWriter[Group] =
+  /** A writer compressing with `codec` (the session's
+    * `spark.sql.parquet.compression.codec`, resolved at query start):
+    * these files land in the table as they are, so they must match
+    * what Spark's own writes store. */
+  def open(conf: Configuration, p: Path, schema: MessageType,
+           codec: CompressionCodecName): ParquetWriter[Group] =
     ExampleParquetWriter.builder(p).withType(schema)
-      .withConf(conf).build()
+      .withConf(conf).withCompressionCodec(codec).build()
 }
 
 /** Epoch-commit message: the staged files this task wrote. */
@@ -183,7 +196,8 @@ class MorLogStreamingWrite(path: String, queryId: String,
                            netPhys: Array[String] = Array.empty,
                            netOrdinals: Array[Int] = Array.empty,
                            netTypes: Array[DataType] = Array.empty,
-                           maxOpenWriters: Int = 32)
+                           maxOpenWriters: Int = 32,
+                           codec: CompressionCodecName)
     extends StreamingWrite {
 
   override def createStreamingWriterFactory(
@@ -193,7 +207,7 @@ class MorLogStreamingWrite(path: String, queryId: String,
     MorLogEpochWriterFactory(s"$path/_log", dataNames, dataTypes,
       physNames, dataOrdinals, partSpec, opOrdinal, deleteValue,
       physKeys, keyTypes, conf, zoneId, netPhys, netOrdinals, netTypes,
-      maxOpenWriters)
+      maxOpenWriters, codec)
 
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit = {
@@ -234,20 +248,36 @@ case class MorLogEpochWriterFactory(logDir: String,
                                       Array.empty,
                                     netTypes: Array[DataType] =
                                       Array.empty,
-                                    maxOpenWriters: Int = 32)
+                                    maxOpenWriters: Int = 32,
+                                    codec: CompressionCodecName)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
     new MorLogEpochWriter(logDir, dataNames, dataTypes, physNames,
       dataOrdinals, partSpec, opOrdinal, deleteValue, physKeys,
       keyTypes, new Configuration(conf.value), zoneId, netPhys,
-      netOrdinals, netTypes, maxOpenWriters)
+      netOrdinals, netTypes, maxOpenWriters, codec)
 }
 
 /** One task's epoch writer: routes delete-tagged rows to a key-only
   * side file, splits data rows one-file-per-partition-tuple (the
   * transform derives executor-side), encodes via the Group API under
-  * PHYSICAL column names. */
+  * PHYSICAL column names.
+  *
+  * With `netOrdinals` (the sink's `netBy`) it also NETS: its input
+  * arrives clustered by key and sorted by key ascending (the netted
+  * write's required distribution and ordering), so it holds only the
+  * current key's best data row and best delete tuple and, when the
+  * key changes, writes the winner — the data row unless a delete
+  * carries a STRICTLY greater order tuple. It refuses, failing the
+  * epoch: a NULL key or order column on either side; two data rows
+  * tied on the key's top tuple (even when a newer delete wins — an
+  * arbitrary winner would be nondeterministic); a key arriving below
+  * the previous one (the required ordering was not applied, and
+  * netting unordered rows would keep a loser silently). Winners leave
+  * in KEY order, so on a partitioned table a task whose epoch spans
+  * more than `maxOpenWriters` partition tuples seals a file at every
+  * eviction — more, smaller files, never more memory. */
 class MorLogEpochWriter(logDir: String, dataNames: Array[String],
                         dataTypes: Array[DataType],
                         physNames: Array[String],
@@ -259,7 +289,9 @@ class MorLogEpochWriter(logDir: String, dataNames: Array[String],
                         netPhys: Array[String] = Array.empty,
                         netOrdinals: Array[Int] = Array.empty,
                         netTypes: Array[DataType] = Array.empty,
-                        maxOpenWriters: Int = 32)
+                        maxOpenWriters: Int = 32,
+                        codec: CompressionCodecName =
+                          CompressionCodecName.SNAPPY)
     extends DataWriter[InternalRow] {
 
   private val msgType = GroupEncode.messageType(physNames, dataTypes)
@@ -363,6 +395,8 @@ class MorLogEpochWriter(logDir: String, dataNames: Array[String],
       }
     }.mkString("")
 
+  private val deleteUtf8 = UTF8String.fromString(deleteValue)
+
   override def write(row: InternalRow): Unit = {
     // a NULL op would silently act as an upsert — the same hazard the
     // batch mergeInto refuses (there a null op silently deleted);
@@ -371,43 +405,116 @@ class MorLogEpochWriter(logDir: String, dataNames: Array[String],
       throw new IllegalArgumentException(
         "streaming sink: a row carries a NULL op column — route every " +
           s"row explicitly ('$deleteValue' or an upsert op)")
-    if (opOrdinal >= 0 &&
-        row.getUTF8String(opOrdinal).toString == deleteValue) {
-      if (delWriter == null) {
-        val p = newPath("del")
-        delWriter = (GroupEncode.open(conf, new Path(p), delMsgType), p)
-      }
-      val g = delFactory.newGroup()
-      var i = 0
-      while (i < physKeys.length) {
-        GroupEncode.add(g, physKeys(i), keyTypes(i), row, keyOrds(i))
-        i += 1
-      }
-      var j = 0
-      while (j < netOrdinals.length) {
-        GroupEncode.add(g, netPhys(j), netTypes(j), row, netOrdinals(j))
-        j += 1
-      }
-      delWriter._1.write(g)
-    } else {
-      val pk = partKey(row)
-      var w = writers.get(pk)
-      if (w == null) {
-        val p = newPath("data")
-        w = (GroupEncode.open(conf, new Path(p), msgType), p)
-        writers.put(pk, w) // may evict the eldest (see the pool doc)
-        MorLogStreamSinkStats.maxOpenObserved
-          .accumulateAndGet(writers.size, Math.max(_, _))
-      }
-      val g = factory.newGroup()
-      var i = 0
-      while (i < physNames.length) {
-        GroupEncode.add(g, physNames(i), dataTypes(i), row,
-          dataOrdinals(i))
-        i += 1
-      }
-      w._1.write(g)
+    val isDelete =
+      opOrdinal >= 0 && row.getUTF8String(opOrdinal) == deleteUtf8
+    if (netting) net(row, isDelete)
+    else if (isDelete) writeDelete(row)
+    else writeData(row)
+  }
+
+  private def writeDelete(row: InternalRow): Unit = {
+    if (delWriter == null) {
+      val p = newPath("del")
+      delWriter = (GroupEncode.open(conf, new Path(p), delMsgType,
+        codec), p)
     }
+    val g = delFactory.newGroup()
+    var i = 0
+    while (i < physKeys.length) {
+      GroupEncode.add(g, physKeys(i), keyTypes(i), row, keyOrds(i))
+      i += 1
+    }
+    var j = 0
+    while (j < netOrdinals.length) {
+      GroupEncode.add(g, netPhys(j), netTypes(j), row, netOrdinals(j))
+      j += 1
+    }
+    delWriter._1.write(g)
+  }
+
+  private def writeData(row: InternalRow): Unit = {
+    val pk = partKey(row)
+    var w = writers.get(pk)
+    if (w == null) {
+      val p = newPath("data")
+      w = (GroupEncode.open(conf, new Path(p), msgType, codec), p)
+      writers.put(pk, w) // may evict the eldest (see the pool doc)
+      MorLogStreamSinkStats.maxOpenObserved
+        .accumulateAndGet(writers.size, Math.max(_, _))
+    }
+    val g = factory.newGroup()
+    var i = 0
+    while (i < physNames.length) {
+      GroupEncode.add(g, physNames(i), dataTypes(i), row,
+        dataOrdinals(i))
+      i += 1
+    }
+    w._1.write(g)
+  }
+
+  // ---- netting (see the class doc) ----------------------------------
+  private val netting = netOrdinals.nonEmpty
+  private def logical(phys: Array[String]): String =
+    phys.map(p => dataNames(physNames.indexOf(p))).mkString(", ")
+  private def ascending(ords: Array[Int],
+                        types: Array[DataType]): InterpretedOrdering =
+    new InterpretedOrdering(ords.indices.map(i =>
+      SortOrder(BoundReference(ords(i), types(i), nullable = true),
+        Ascending)))
+  private lazy val keyOrdering = ascending(keyOrds, keyTypes)
+  private lazy val netOrdering = ascending(netOrdinals, netTypes)
+  /** The current key's best data row / best delete row (copies: the
+    * input iterator reuses its row objects), and whether another data
+    * row ties the best one's order tuple. */
+  private var bestData: InternalRow = _
+  private var bestDelete: InternalRow = _
+  private var dataTie = false
+
+  private def net(row: InternalRow, isDelete: Boolean): Unit = {
+    def side = if (isDelete) "delete" else "data"
+    if (keyOrds.exists(row.isNullAt))
+      throw new IllegalArgumentException(
+        s"stream epoch: NULL key column (${logical(physKeys)}) in " +
+          s"$side rows")
+    if (netOrdinals.exists(row.isNullAt))
+      throw new IllegalArgumentException(
+        s"stream epoch netBy: NULL ${logical(netPhys)} in $side rows " +
+          "— every order column must be total on every routed row")
+    val current = if (bestData != null) bestData else bestDelete
+    if (current != null) {
+      val c = keyOrdering.compare(row, current)
+      if (c < 0)
+        throw new IllegalStateException(
+          s"stream epoch netBy: a key (${logical(physKeys)}) arrived " +
+            "below the previous one — the epoch's rows are not sorted " +
+            "by key (the netted write's required distribution and " +
+            "ordering was not applied); refusing to net them")
+      if (c > 0) flushKey()
+    }
+    if (isDelete) {
+      if (bestDelete == null || netOrdering.compare(row, bestDelete) > 0)
+        bestDelete = row.copy()
+    } else if (bestData == null) bestData = row.copy()
+    else {
+      val c = netOrdering.compare(row, bestData)
+      if (c > 0) { bestData = row.copy(); dataTie = false }
+      else if (c == 0) dataTie = true
+    }
+  }
+
+  /** Write the finished key's winner and forget the key. */
+  private def flushKey(): Unit = {
+    if (dataTie)
+      throw new IllegalArgumentException(
+        s"stream epoch netBy: data rows tie on ((${logical(physKeys)}), " +
+          s"(${logical(netPhys)})) — an arbitrary winner would be " +
+          "nondeterministic; netBy accepts a comma-separated tiebreak " +
+          "list (e.g. netBy=ts,_seq) — append a finer ordinal")
+    if (bestData != null && (bestDelete == null ||
+        netOrdering.compare(bestData, bestDelete) >= 0))
+      writeData(bestData)
+    else if (bestDelete != null) writeDelete(bestDelete)
+    bestData = null; bestDelete = null
   }
 
   private def openPaths: Seq[String] = {
@@ -417,6 +524,7 @@ class MorLogEpochWriter(logDir: String, dataNames: Array[String],
 
   override def commit(): WriterCommitMessage = {
     import scala.jdk.CollectionConverters._
+    if (netting) flushKey()
     writers.values.asScala.foreach(_._1.close())
     if (delWriter != null) delWriter._1.close()
     MorLogStagedFiles(sealedFiles.toSeq ++ openPaths,
